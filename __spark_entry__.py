@@ -1818,7 +1818,7 @@ def q_o12_cuckoo_evict(spark, sf):
     (operators/cuckoo.py): build the filter over a seen subset of
     documents, evict a re-crawl-due sub-subset (delete_keys — the
     operation the Bloom family cannot do), then anti_join_new with the
-    cuckoo probe. The prefilter only prunes shuffle; the result is the
+    cuckoo probe. The prefilter never changes the result: it is the
     exact set difference, so the oracle is plain relational SQL."""
     from barkingowl_spark.operators.cuckoo import (
         IncrementalCuckoo,

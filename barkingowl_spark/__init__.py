@@ -18,8 +18,8 @@ Layout:
   functions/extract.py  link + text extraction pandas UDF (O7, O27)
   functions/textstats.py language-id / quality / tokens / fingerprint
   functions/hashing.py  portable minhash / simhash building blocks
-  operators/dedup.py    seen-set + in-wave dedup, bloom prefilter (O12, O19)
-  operators/ordering.py BFS wave ordering / discovery_idx (O18)
+  operators/dedup.py    exact seen-set anti-join, Bloom filter (O12)
+  operators/ordering.py BFS wave ordering / discovery_idx / first-wins (O18, O19)
   operators/politeness.py per-host top-B budget + robots filter (O20)
   operators/match.py    doc-type matcher (O15)
   operators/corpus_dedup.py  exact / minhash-LSH / jaccard / simhash dedup

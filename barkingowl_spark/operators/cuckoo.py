@@ -137,8 +137,8 @@ def _probe_many(table: np.ndarray, vals: np.ndarray, nb: int) -> np.ndarray:
 class IncrementalCuckoo:
     """Persistent cross-wave cuckoo-filter state with deletion + adaptive
     growth. API-compatible with IncrementalBloom (add_keys / needs_grow /
-    grow / snapshot) plus ``delete_keys`` — the crawl plan treats either
-    as the O12 stage-1 prefilter."""
+    grow / snapshot) plus ``delete_keys``; ``dedup.anti_join_new``
+    accepts either snapshot's probe as its optional prefilter."""
 
     def __init__(self, n_partitions: int = 32, n_buckets: int = 1 << 15,
                  target_fill: float = 0.85):

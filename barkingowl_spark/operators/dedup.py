@@ -1,22 +1,21 @@
-"""Seen-set dedup: Bloom prefilter + exact anti-join — SURVEY.md O12/O22.
+"""Seen-set dedup: exact anti-join, optional probabilistic prefilter —
+SURVEY.md O12/O22.
 
 The reference's seen-set is an O(n) Python list scan per link
-([GH] scraper.py processed_links, C1 — its biggest scalability sin). Here:
+([GH] scraper.py processed_links, C1 — its biggest scalability sin). The
+crawl wave loop replaces it with ONE exact left_anti join on
+(seed_url, url_hash) against the seen table — which guarantees the
+exact-seen-set metric (BASELINE.json) — placed after the in-wave
+first-wins window so the join reuses that window's hash partitioning.
 
-  stage 1 (probabilistic, cuts shuffle): a partitioned Bloom filter over the
-  seen-set's url_hash values. Candidates the filter rejects are DEFINITELY
-  new and skip the anti-join entirely; only possible-members shuffle.
-  False positives cost a wasted probe, never a dropped URL.
-
-  stage 2 (exact): left_anti join on (seed_url, url_hash) against the seen
-  table — guarantees the exact-seen-set metric (BASELINE.json).
-
-Two transports, one policy: IncrementalBloom keeps the per-pid
-bitsets in a driver dict and broadcasts them (the sandbox default);
-TableBloom (r4) keeps them as a versioned (pid, bitset) parquet table
-OR-merged per wave and probed by a pid-cogrouped applyInPandas — the
-10^10 transport, where the driver never holds a bitset
-(CrawlConfig.prefilter_transport="table"; PLANS.md section).
+The partitioned Bloom filter (IncrementalBloom + bloom_maybe_seen_udf)
+and the cuckoo filter (operators/cuckoo.py, whose deletion the
+o12_cuckoo_evict driver query exercises) remain as operators.
+``anti_join_new`` still accepts either one as a prefilter, but in the
+executed plan it saves no work: rows tagged
+definite-new carry a NULL join key that still goes through the
+candidate-side exchange, and the Python probe adds an ArrowEvalPython
+stage plus a third exchange. That is why the wave loop does not use it.
 """
 
 from __future__ import annotations
@@ -55,29 +54,6 @@ def _probe_bitset(vals: np.ndarray, bits: np.ndarray, m: int) -> np.ndarray:
     return maybe
 
 
-def build_bloom(seen: DataFrame, n_partitions: int = 32) -> dict[int, tuple[bytes, int]]:
-    """{partition_id: (bitset_bytes, m)} built distributedly per partition."""
-    keyed = seen.select(
-        F.pmod(F.col("url_hash"), F.lit(n_partitions)).cast("int").alias("pid"),
-        "url_hash",
-    )
-
-    def make(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        vals = pdf["url_hash"].to_numpy(dtype=np.int64)
-        m = max(64, int(len(vals) * BITS_PER_KEY))
-        bits = _build_bitset(vals, m)
-        return pd.DataFrame(
-            {"pid": [int(key[0])], "bits": [bits.tobytes()], "m": [m]}
-        )
-
-    rows = (
-        keyed.groupBy("pid")
-        .applyInPandas(make, schema="pid int, bits binary, m long")
-        .collect()
-    )
-    return {r["pid"]: (r["bits"], r["m"]) for r in rows}
-
-
 _POPCOUNT_LUT = np.unpackbits(
     np.arange(256, dtype=np.uint8)[:, None], axis=1
 ).sum(axis=1).astype(np.int64)
@@ -96,9 +72,6 @@ class IncrementalBloom:
     caller rebuilds via ``grow()`` with m re-targeted from the observed
     key count (BITS_PER_KEY bits/key, next power of two). Doubling
     schedule => O(log n) rebuilds over a run, each one distributed job.
-    At the 10^10 design point the same (pid, bitset) pairs live as a
-    table and the OR happens in a merge write; only the transport
-    differs.
     """
 
     def __init__(self, n_partitions: int = 32, m_bits: int = 1 << 20,
@@ -111,8 +84,7 @@ class IncrementalBloom:
 
     def add_keys(self, keys: DataFrame) -> int:
         """OR the url_hash values of ``keys`` into the partition
-        bitsets. Returns the number of keys added (the auto-transport
-        switchover in plans/crawl.py accumulates it)."""
+        bitsets. Returns the number of keys added."""
         m = self.m
         keyed = keys.select(
             F.pmod(F.col("url_hash"), F.lit(self.n_partitions)).cast("int")
@@ -199,205 +171,6 @@ def bloom_maybe_seen_udf(spark, blooms: dict[int, tuple[bytes, int]], n_partitio
     return probe
 
 
-class TableBloom:
-    """EXECUTOR-SIDE transport of the incremental Bloom state (the r3
-    verdict's "watch" item made code): the per-pid bitsets live as a
-    tiny (pid, bits, n, set_bits, m) parquet table — versioned dirs
-    under ``root`` with the TableIO atomic-rename convention — and
-    every state transition is a distributed job:
-
-      add_keys : build per-pid DELTA bitsets with applyInPandas, union
-                 with the current table, OR-fold per pid executor-side,
-                 write the next version. Bitset bytes never visit the
-                 driver.
-      probe    : pid-COGROUPED applyInPandas — each hash partition's
-                 candidates meet exactly their partition's bitset in
-                 one task (``anti_join_new`` method). No broadcast, no
-                 driver dict; the candidate side shuffles once by pid,
-                 which is the honest price of not shipping multi-GB
-                 filter state through the driver at 10^10 keys.
-      grow     : re-target m from the table's own n total (one 1-row
-                 agg) and rebuild from the authoritative seen-set.
-
-    The driver only ever sees O(1) scalars (max fill fraction, key
-    total) and O(#versions) directory names. Same add/needs_grow/grow
-    surface as IncrementalBloom, same adaptive-sizing policy, same
-    exactness story (the anti-join confirms; the filter may only
-    false-positive). State is rebuilt at run start (the driver-family
-    lifecycle); persistence is for cross-WAVE executor transport."""
-
-    def __init__(self, spark, root: str, n_partitions: int = 32,
-                 m_bits: int = 1 << 20, target_fill: float = 0.5):
-        import os
-        import shutil
-
-        self.spark = spark
-        self.root = root
-        self.n_partitions = n_partitions
-        self.m = m_bits
-        self.target_fill = target_fill
-        if os.path.exists(root):
-            shutil.rmtree(root)
-        os.makedirs(root, exist_ok=True)
-        self._version = 0
-
-    # -- versioned-table plumbing (TableIO atomic-rename convention) --
-
-    def _vdir(self, v: int) -> str:
-        import os
-
-        return os.path.join(self.root, f"v={v}")
-
-    def _read(self) -> DataFrame | None:
-        import os
-
-        if self._version == 0:
-            return None
-        d = self._vdir(self._version)
-        if not os.path.isdir(d):
-            return None
-        return self.spark.read.parquet(d)
-
-    def _write(self, df: DataFrame) -> None:
-        import os
-        import shutil
-
-        nxt = self._version + 1
-        tmp = self._vdir(nxt) + ".tmp"
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        df.coalesce(max(1, self.n_partitions // 8)).write.parquet(tmp)
-        if os.path.exists(self._vdir(nxt)):
-            shutil.rmtree(self._vdir(nxt))
-        os.rename(tmp, self._vdir(nxt))
-        self._version = nxt
-        stale = self._vdir(nxt - 2)
-        if nxt >= 2 and os.path.exists(stale):
-            shutil.rmtree(stale)
-
-    # -- state transitions (all distributed) --------------------------
-
-    def add_keys(self, keys: DataFrame, merge: bool = True) -> None:
-        """OR ``keys`` into the table (one distributed delta-build +
-        OR-fold + versioned write). ``merge=False`` rebuilds from
-        scratch — grow()'s path, where the current bitsets are sized
-        for the OLD m and must not be OR-mixed in."""
-        m = self.m
-        keyed = keys.select(
-            F.pmod(F.col("url_hash"), F.lit(self.n_partitions))
-            .cast("int").alias("pid"),
-            "url_hash",
-        )
-
-        def make(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            vals = pdf["url_hash"].to_numpy(dtype=np.int64)
-            return pd.DataFrame(
-                {"pid": [int(key[0])],
-                 "bits": [_build_bitset(vals, m).tobytes()],
-                 "n": [len(vals)]})
-
-        delta = keyed.groupBy("pid").applyInPandas(
-            make, schema="pid int, bits binary, n long")
-        cur = self._read() if merge else None
-        src = delta if cur is None else delta.unionByName(
-            cur.select("pid", "bits", "n"))
-
-        def orfold(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            acc, n = None, 0
-            for b, nn in zip(pdf["bits"], pdf["n"]):
-                arr = np.frombuffer(bytes(b), dtype=np.uint8)
-                acc = arr.copy() if acc is None else (acc | arr)
-                n += int(nn)
-            return pd.DataFrame(
-                {"pid": [int(key[0])], "bits": [acc.tobytes()],
-                 "n": [n],
-                 "set_bits": [int(_POPCOUNT_LUT[acc].sum())],
-                 "m": [m]})
-
-        self._write(src.groupBy("pid").applyInPandas(
-            orfold,
-            schema="pid int, bits binary, n long, set_bits long,"
-                   " m long"))
-
-    def fill_fraction(self) -> float:
-        cur = self._read()
-        if cur is None:
-            return 0.0
-        row = cur.agg(F.max("set_bits").alias("mx")).collect()[0]
-        return float(row["mx"] or 0) / self.m
-
-    def needs_grow(self) -> bool:
-        return self.fill_fraction() > self.target_fill
-
-    def grow(self, all_keys: DataFrame) -> int:
-        cur = self._read()
-        total = 0
-        if cur is not None:
-            total = int(
-                cur.agg(F.sum("n").alias("t")).collect()[0]["t"] or 0)
-        per_part = max(1, total // self.n_partitions)
-        want = per_part * BITS_PER_KEY
-        new_m = self.m
-        while new_m < want:
-            new_m <<= 1
-        new_m <<= 1
-        self.m = new_m
-        self.add_keys(all_keys, merge=False)  # fresh epoch at new m
-        return new_m
-
-    # -- probe (pid-cogrouped; no driver state) -----------------------
-
-    def anti_join_new(
-        self, candidates: DataFrame, seen: DataFrame
-    ) -> DataFrame:
-        """Exactly-new candidates, prefiltered by the TABLE bitsets:
-        candidates cogroup with their pid's bitset row, definite-new
-        rows get a NULL join key (skip the anti-join build side), then
-        the same exact left_anti as the driver-transport path."""
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        cur = self._read()
-        seen_keys = seen.select(
-            "seed_url", "url_hash").hint("shuffle_hash")
-        if cur is None:
-            return candidates.join(
-                seen_keys, ["seed_url", "url_hash"], "left_anti")
-        m = self.m
-        cand = candidates.withColumn(
-            "_pid",
-            F.pmod(F.col("url_hash"), F.lit(self.n_partitions))
-            .cast("int"))
-        out_schema = StructType(
-            [f for f in candidates.schema.fields]
-            + [StructField("_jk", LongType())])
-
-        def tag(cdf: pd.DataFrame, bdf: pd.DataFrame) -> pd.DataFrame:
-            vals = cdf["url_hash"].to_numpy(dtype=np.int64)
-            if len(bdf) == 0:
-                maybe = np.zeros(len(cdf), dtype=bool)
-            else:
-                bits = np.frombuffer(
-                    bytes(bdf["bits"].iloc[0]), dtype=np.uint8)
-                maybe = _probe_bitset(vals, bits, m)
-            out = cdf.drop(columns=["_pid"])
-            out["_jk"] = pd.Series(vals, dtype="Int64").mask(~maybe)
-            return out
-
-        tagged = (
-            cand.groupBy("_pid")
-            .cogroup(cur.select("pid", "bits").groupBy("pid"))
-            .applyInPandas(tag, schema=out_schema)
-        )
-        return (
-            tagged.join(
-                seen_keys.withColumnRenamed("url_hash", "_jk"),
-                ["seed_url", "_jk"],
-                "left_anti",
-            )
-            .drop("_jk")
-        )
-
-
 def anti_join_new(
     candidates: DataFrame,
     seen: DataFrame,
@@ -405,18 +178,23 @@ def anti_join_new(
     n_partitions: int = 32,
     probe=None,
 ) -> DataFrame:
-    """Exactly-new candidates. With a prefilter, definite-new rows carry a
-    NULL join key — a null key matches nothing, so one left_anti pass both
-    bypasses the shuffle for definite-new rows (null keys don't need to
-    reach the build side) and confirms possible-members exactly. Single
-    pass: no branch/union, upstream lineage evaluated once.
+    """Exactly-new candidates: left_anti on (seed_url, url_hash).
 
-    The stage-1 prefilter is either ``blooms`` (an IncrementalBloom
-    snapshot, the default family) or ``probe`` (any vectorized
-    url_hash->maybe-seen pandas UDF — e.g. cuckoo_maybe_seen_udf from
-    operators/cuckoo.py, whose filter additionally supports deletion for
-    re-crawl eviction). Both may only false-POSITIVE, never
-    false-negative, so the result is exact either way.
+    Without a prefilter this is the plain join. When ``candidates`` is
+    already hash-partitioned on (seed_url, url_hash) — the output of
+    ``ordering.first_discovery_wins``, as in the crawl wave loop — the
+    candidate side is not shuffled again.
+
+    An optional prefilter is either ``blooms`` (an IncrementalBloom
+    snapshot) or ``probe`` (any vectorized url_hash->maybe-seen pandas
+    UDF, e.g. cuckoo_maybe_seen_udf from operators/cuckoo.py). Rows the
+    filter calls definite-new get a NULL join key, which matches nothing,
+    so one left_anti pass still confirms possible members exactly (no
+    branch/union; upstream lineage evaluated once). Both filters may only
+    false-POSITIVE, so the result is exact either way. The NULL keys do
+    NOT bypass the exchange: every candidate row is still shuffled on the
+    new key, which also breaks reuse of an upstream (seed_url, url_hash)
+    partitioning, and the probe adds a Python evaluation stage.
 
     The seen side is hinted shuffle_hash: the seen-set GROWS every wave,
     and letting Catalyst broadcast it would rebuild a driver-side hash

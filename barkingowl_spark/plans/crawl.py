@@ -13,7 +13,7 @@ One wave = one DataFrame iteration over narrow rows only:
     sched    = politeness top-B per host over due                 [O20, robots]
     parsed   = sched(+level ranks) JOIN ingest_pages              [O5/O13]
     links    = sched JOIN edges -> scope filter                   [O9, O11]
-    fresh    = bloom prefilter -> anti-join seen -> first-wins     [O12, O19]
+    fresh    = first-wins -> exact anti-join seen                 [O19, O12]
     typed    = fresh JOIN pages_ct -> doc | missing | queued | pruned [O15]
     queue'   = (queue - sched) UNION typed[queued]                [O21]
     archive += fetched UNION typed[terminal]                      [O22]
@@ -55,15 +55,7 @@ from pyspark.sql import functions as F
 
 from barkingowl_spark.functions.canon import canonicalize, host_of
 from barkingowl_spark.functions.extract import parse_pages_udf
-from barkingowl_spark.operators.cuckoo import (
-    IncrementalCuckoo,
-    cuckoo_maybe_seen_udf,
-)
-from barkingowl_spark.operators.dedup import (
-    IncrementalBloom,
-    TableBloom,
-    anti_join_new,
-)
+from barkingowl_spark.operators.dedup import anti_join_new
 from barkingowl_spark.operators.match import matched_by_col, pages_content_type
 from barkingowl_spark.operators.ordering import (
     child_discovery_idx,
@@ -97,40 +89,6 @@ METRIC_COUNTERS = [
 class CrawlConfig:
     checkpoint_dir: str
     host_budget: int | None = None          # O20; None = oracle-match mode
-    use_bloom: bool = True                  # O12 stage-1 prefilter
-    bloom_partitions: int = 32
-    # O12 prefilter family (north_star: "partitioned Bloom/cuckoo
-    # filters"). "bloom" = IncrementalBloom (grow-only); "cuckoo" =
-    # IncrementalCuckoo (supports delete_keys for re-crawl eviction).
-    # Either way the anti-join stays exact; use_bloom=False disables the
-    # stage entirely.
-    prefilter: str = "bloom"
-    # O12 prefilter TRANSPORT (r4 verdict items 4; auto default r5).
-    # "driver" = per-pid bitsets collect to a driver dict and
-    # re-broadcast per wave (fine at sandbox scale, but multi-GB
-    # driver state at 10^10 keys). "table" = TableBloom: bitsets live
-    # as a versioned (pid, bits) parquet table under
-    # <checkpoint_dir>/bloom_state, OR-merged per wave by a
-    # distributed job and probed by a pid-cogrouped applyInPandas —
-    # the driver never holds a bitset. "auto" (DEFAULT since r5)
-    # starts on the driver transport (cheaper per wave while the
-    # seen-set is small) and switches to the table transport the
-    # first time the cumulative key count crosses
-    # prefilter_table_threshold_keys — so the 10^10 design point
-    # never materializes driver bitsets without a config change.
-    # Exactness is identical on every path (the anti-join confirms);
-    # tests/test_table_bloom.py pins byte-identical crawl traces on
-    # both sides of the switchover. Bloom family only (cuckoo keeps
-    # the driver transport — its delete support has no table
-    # transport yet).
-    prefilter_transport: str = "auto"
-    # "auto" switchover point. At BITS_PER_KEY (12) bits/key the
-    # driver dict crosses ~100 MB around 5e7 keys — switch an order
-    # of magnitude before that so the driver never carries bitsets
-    # that would matter at 10^10 (where the table transport is the
-    # only sane plan from wave 0; set prefilter_transport="table" to
-    # skip the driver phase entirely).
-    prefilter_table_threshold_keys: int = 5_000_000
     # waves smaller than this are broadcast into the pages/pages_ct joins
     # (corpus side never shuffles); bigger waves fall back to shuffle hash
     # join + AQE (the 10^10 path, where the wave itself is too big to ship)
@@ -258,7 +216,7 @@ def _seeds_cfg(spark: SparkSession, seeds: DataFrame) -> DataFrame:
 
 
 def _typecheck(candidates: DataFrame, pages_ct: DataFrame,
-               seeds_cfg: DataFrame, broadcast_candidates: bool = True) -> DataFrame:
+               seeds_cfg: DataFrame) -> DataFrame:
     """Discovery-time typecheck (O15 + O10 boundary): assign status and
     matched_by to candidate rows carrying (seed_url, url, depth, ...).
 
@@ -271,8 +229,7 @@ def _typecheck(candidates: DataFrame, pages_ct: DataFrame,
     un-hinted, Catalyst broadcasts while it fits and falls back to SHJ
     (preferSortMergeJoin=false session-wide). Spark cannot broadcast the
     preserved side of an outer join, so the candidate side cannot ship to
-    the corpus scan here; broadcast_candidates is kept for an Iceberg
-    storage-partitioned-join variant."""
+    the corpus scan here."""
     with_cfg = candidates.join(F.broadcast(seeds_cfg), "seed_url")
     c = with_cfg.join(pages_ct, "url", "left")
     mb = matched_by_col(F.col("content_type"), F.col("url"), F.col("doc_type"))
@@ -453,71 +410,6 @@ def run_crawl(
                   flush=True)
 
     _t_pre = time.monotonic()
-    bloom = None
-    if config.use_bloom:
-        # one full build at start (or resume); waves then add fresh keys
-        # incrementally. Both families share the add/grow/snapshot API;
-        # only the probe constructor differs (see _prefilter_probe).
-        if config.prefilter_transport not in ("driver", "table", "auto"):
-            raise ValueError(
-                f"unknown prefilter_transport "
-                f"{config.prefilter_transport!r}")
-        if config.prefilter_transport == "table":
-            if config.prefilter == "cuckoo":
-                raise ValueError(
-                    "table transport implemented for the bloom family"
-                    " only (cuckoo keeps the driver transport)")
-            bloom = TableBloom(
-                spark,
-                os.path.join(config.checkpoint_dir, "bloom_state"),
-                config.bloom_partitions,
-            )
-        else:
-            # "auto" starts on the driver transport and may switch to
-            # TableBloom mid-run (see _maybe_switch_transport); cuckoo
-            # always keeps the driver transport.
-            bloom = (
-                IncrementalCuckoo(config.bloom_partitions)
-                if config.prefilter == "cuckoo"
-                else IncrementalBloom(config.bloom_partitions)
-            )
-        seen_key_total = (
-            bloom.add_keys(state.frontier().select("url_hash")) or 0)
-        if bloom.needs_grow():  # resumed seen-set outgrew the default size
-            bloom.grow(state.frontier().select("url_hash"))
-    else:
-        seen_key_total = 0
-
-    def _maybe_switch_transport(bloom, state):
-        """auto transport (r4 verdict item 4 -> r5 default): once the
-        cumulative key count crosses the documented threshold, rebuild
-        the prefilter as a TableBloom from the authoritative seen-set
-        and drop the driver bitsets — one distributed job, after which
-        the driver never holds filter state again this run. The
-        prefilter is conservative-only (the exact anti-join confirms),
-        so the trace is byte-identical on both sides of the switch
-        (pinned by tests/test_table_bloom.py)."""
-        if (config.prefilter_transport != "auto"
-                or not isinstance(bloom, IncrementalBloom)
-                or seen_key_total < config.prefilter_table_threshold_keys):
-            return bloom
-        tb = TableBloom(
-            spark,
-            os.path.join(config.checkpoint_dir, "bloom_state"),
-            config.bloom_partitions,
-            m_bits=bloom.m,
-        )
-        tb.add_keys(state.frontier().select("url_hash"))
-        if os.environ.get("BOW_TIMING") == "1":
-            print(
-                f"BOW_TIMING bloom_transport=table keys={seen_key_total}",
-                flush=True)
-        return tb
-
-    bloom = _maybe_switch_transport(bloom, state)
-    if os.environ.get("BOW_TIMING") == "1":
-        print(f"BOW_TIMING bloom_init={time.monotonic() - _t_pre:.2f}",
-              flush=True)
 
     # Adaptive-salt ledger (SURVEY.md section 4.2): per-host queued-row
     # counts maintained driver-side from the SAME per-(wave,host) metrics
@@ -678,25 +570,13 @@ def run_crawl(
             F.lit(wave).alias("wave"),
         )
 
+        # O19 then O12: first-wins collapses same-URL discoveries, then the
+        # exact anti-join drops what an earlier wave already holds. The
+        # window shuffles candidates on (seed_url, url_hash), the join key,
+        # so the anti-join reuses that partitioning: one candidate shuffle.
         deduped = first_discovery_wins(links)
         seen_keys = state.frontier().select("seed_url", "url_hash")
-        if isinstance(bloom, TableBloom):
-            # executor-side transport: the prefilter tag happens in a
-            # pid-cogrouped applyInPandas against the bitset TABLE —
-            # no driver dict, no broadcast (r4 verdict item 4)
-            fresh = bloom.anti_join_new(deduped, seen_keys)
-        elif isinstance(bloom, IncrementalCuckoo):
-            fresh = anti_join_new(
-                deduped, seen_keys,
-                probe=cuckoo_maybe_seen_udf(
-                    spark, bloom.snapshot(), config.bloom_partitions),
-            )
-        else:
-            fresh = anti_join_new(
-                deduped, seen_keys,
-                bloom.snapshot() if bloom is not None else None,
-                config.bloom_partitions,
-            )
+        fresh = anti_join_new(deduped, seen_keys)
         typed = _typecheck(
             # preparse: pages_ct is a cached corpus-sized projection that
             # grows no hash-build on the driver — shuffle-hash keeps the
@@ -705,12 +585,8 @@ def run_crawl(
             fresh,
             pages_ct.hint("shuffle_hash") if config.preparse else pages_ct,
             seeds_cfg,
-            broadcast_candidates=small_wave
         ).persist()
-        if bloom is not None:
-            seen_key_total += (
-                bloom.add_keys(typed.select("url_hash")) or 0)
-        t_bloom = time.monotonic()
+        t_typed = time.monotonic()
 
         fetched_rows = parsed.select(
             "seed_url", "url", "url_hash", "host", "depth", "discovery_idx",
@@ -845,21 +721,11 @@ def run_crawl(
         parsed.unpersist()
         typed.unpersist()
         state = _load(wave)
-        if bloom is not None and bloom.needs_grow():
-            # prefilter saturating (fill > target => FP ~ fill^k): re-target
-            # m from the observed key count and rebuild from the
-            # authoritative seen-set — doubling schedule, so O(log n)
-            # rebuilds over a run, each one distributed job
-            new_m = bloom.grow(state.frontier().select("url_hash"))
-            if os.environ.get("BOW_TIMING") == "1":
-                print(f"BOW_TIMING bloom_grow wave={wave} m={new_m}",
-                      flush=True)
-        bloom = _maybe_switch_transport(bloom, state)
         if os.environ.get("BOW_TIMING") == "1":
             print(
                 f"BOW_TIMING wave={wave} d={d} sched={sched_total} "
                 f"new_q={new_queued_total} "
-                f"compute={t_bloom - t0:.2f} metrics={t_compute - t_bloom:.2f} "
+                f"compute={t_typed - t0:.2f} metrics={t_compute - t_typed:.2f} "
                 f"write={t_write - t_compute:.2f} "
                 f"load={time.monotonic() - t_write:.2f}",
                 flush=True,

@@ -33,12 +33,15 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from barkingowl_spark.schemas import FRONTIER_SCHEMA, METRICS_SCHEMA
+
+_WAVE_DIR_RE = re.compile(r"wave=(\d+)")
 
 
 class ParquetDirsIO:
@@ -179,14 +182,18 @@ class ParquetDirsIO:
     # -- read -------------------------------------------------------------
 
     def list_waves(self) -> list[int]:
+        """Committed waves: ``wave=<int>`` dirs holding a manifest. A
+        ``wave=K.tmp`` dir left by a crash between the manifest write and
+        the commit rename is not a wave, even with its manifest."""
         out = []
         if not os.path.isdir(self.root):
             return out
         for e in os.listdir(self.root):
-            if e.startswith("wave=") and os.path.exists(
+            m = _WAVE_DIR_RE.fullmatch(e)
+            if m and os.path.exists(
                 os.path.join(self.root, e, "manifest.json")
             ):
-                out.append(int(e.split("=", 1)[1]))
+                out.append(int(m.group(1)))
         return sorted(out)
 
     def latest_wave(self) -> int | None:

@@ -187,7 +187,7 @@ def bench_crawl(spark) -> dict:
     ckpt = tempfile.mkdtemp(prefix="bow_bench_ckpt_")
     t0 = time.monotonic()
     state = run_crawl(
-        spark, seeds, pages, CrawlConfig(checkpoint_dir=ckpt, use_bloom=True)
+        spark, seeds, pages, CrawlConfig(checkpoint_dir=ckpt)
     )
     wall = time.monotonic() - t0
     urls = state.frontier().count()

@@ -52,7 +52,6 @@ def crawl_state(spark, seeds_df, pages_df, tmp_path_factory):
     cfg = CrawlConfig(
         checkpoint_dir=str(tmp_path_factory.mktemp("ckpt")),
         host_budget=None,
-        use_bloom=True,
     )
     return run_crawl(spark, seeds_df, pages_df, cfg)
 
@@ -117,7 +116,6 @@ def test_politeness_budget_invariance(spark, seeds_df, pages_df,
     cfg = CrawlConfig(
         checkpoint_dir=str(tmp_path_factory.mktemp("ckpt_b")),
         host_budget=3,
-        use_bloom=False,
     )
     state = run_crawl(spark, seeds_df, pages_df, cfg)
     o_traces, o_docs, o_texts = oracle_outputs(fixture_data)

@@ -40,6 +40,30 @@ def test_seen_anti_join_is_shuffled_hash_not_broadcast(spark):
     assert "BroadcastHashJoin" not in plan
 
 
+def test_wave_dedup_shuffles_candidates_once_no_python(spark):
+    """O19 -> O12 as the wave loop runs them: the exact anti-join reuses
+    first_discovery_wins' (seed_url, url_hash) partitioning, so the plan
+    holds exactly two hash exchanges (candidates once, seen once) and no
+    Python stage — a prefilter probe would add an ArrowEvalPython stage
+    and re-shuffle the candidates on its tagged key."""
+    from barkingowl_spark.operators.dedup import anti_join_new
+    from barkingowl_spark.operators.ordering import first_discovery_wins
+
+    cands = spark.createDataFrame(
+        pd.DataFrame({
+            "seed_url": ["http://s.test/p0"] * 60,
+            "url_hash": [i % 40 for i in range(60)],
+            "discovery_idx": list(range(60)),
+            "depth": [1] * 60,
+        })
+    )
+    seen = _seen_df(spark, 100)
+    plan = _plan(anti_join_new(first_discovery_wins(cands), seen))
+    assert "ArrowEvalPython" not in plan
+    assert "FlatMapGroupsInPandas" not in plan
+    assert plan.count("Exchange hashpartitioning") == 2, plan
+
+
 def test_robots_dim_join_is_broadcast(spark):
     """O20 robots: the dim table is tiny and must broadcast (no shuffle
     of the links side for a filter)."""
