@@ -117,7 +117,15 @@ def extract_xls_cells(
     payload: bytes,
 ) -> list[tuple[str, str, str]]:
     """payload -> [(cell_ref, kind, value)] in record order; kind
-    's' for SST labels, 'n' for NUMBER/RK/MULRK."""
+    's' for SST labels, 'n' for NUMBER/RK/MULRK. ValueError on
+    corrupt or truncated records."""
+    try:
+        return _xls_cells_checked(payload)
+    except (struct.error, IndexError) as e:
+        raise ValueError(f"corrupt BIFF record: {e}") from e
+
+
+def _xls_cells_checked(payload: bytes) -> list[tuple[str, str, str]]:
     try:
         stream = read_cfb_stream(payload, "Workbook")
     except ValueError:

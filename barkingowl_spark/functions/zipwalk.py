@@ -174,9 +174,16 @@ def _walk_checked(
 
 def read_zip_member(payload: bytes, name: str) -> bytes:
     """Decompressed bytes of the named member (first match in
-    central-directory order), CRC-verified — ValueError if absent
-    or failing its checksum. The random-access primitive the
-    office-document extractors build on."""
+    central-directory order), CRC-verified — ValueError if absent,
+    failing its checksum or truncated. The random-access primitive
+    the office-document extractors build on."""
+    try:
+        return _read_member_checked(payload, name)
+    except (struct.error, IndexError) as e:
+        raise ValueError(f"corrupt ZIP: {e}") from e
+
+
+def _read_member_checked(payload: bytes, name: str) -> bytes:
     tail_start = max(0, len(payload) - 65536 - 22)
     eocd = payload.rfind(ZIP_EOCD, tail_start)
     if eocd < 0:
@@ -217,7 +224,13 @@ def read_zip_member(payload: bytes, name: str) -> bytes:
         raw = payload[data_off:data_off + csize]
         if len(raw) != csize:
             raise ValueError("member data outside file")
-        data = raw if method == 0 else zlib.decompress(raw, wbits=-15)
+        if method == 0:
+            data = raw
+        else:
+            try:
+                data = zlib.decompress(raw, wbits=-15)
+            except zlib.error as e:
+                raise ValueError(f"bad deflate member: {e}") from e
         if len(data) != usize or zlib.crc32(data) != crc:
             raise ValueError(f"ZIP member {name} fails its CRC")
         return data

@@ -109,7 +109,7 @@ def host_graph(edges: DataFrame, host_expr=None) -> DataFrame:
     canon host. Self-loops (intra-host links) are kept — they are the
     politeness scheduler's per-host load signal."""
     if host_expr is None:
-        # same netloc regex the wave loop uses (plans/crawl.py _HOST_RE):
+        # same netloc regex the ingest edges use (plans/ingest.py HOST_RE):
         # relational, whole-stage-codegen — no UDF
         host_expr = lambda c: F.regexp_extract(  # noqa: E731
             c, r"^[a-z][a-z0-9+.-]*://([^/]+)", 1)

@@ -10,7 +10,7 @@ whole-stage-codegen friendly, no Python in the hot path.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -22,18 +22,6 @@ def content_type_col(html: Column) -> Column:
             F.substring(html.cast("binary"), 1, 4) == F.lit(b"%PDF"),
             F.lit("application/pdf"),
         ).otherwise(F.lit("text/html"))
-    )
-
-
-def pages_content_type(pages: DataFrame) -> DataFrame:
-    """(url, content_type) meta view of the corpus.
-
-    Computed once and persisted by the caller: every wave's typecheck joins
-    against this narrow table instead of re-reading the html column
-    (column-pruned scan: only url+html read once, then just url+ct reused).
-    """
-    return pages.select(
-        "url", content_type_col(F.col("html")).alias("content_type")
     )
 
 

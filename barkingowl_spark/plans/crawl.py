@@ -1,8 +1,8 @@
 """The crawl wave loop — SURVEY.md section 3.2 (O5/O6/O13/O14/O16/O21/O22, D7/D8).
 
-INGEST (once per run, default preparse=True — DESIGN.md
-"Parse-on-ingest"): one parse pass over the corpus inside the scan
-stage [O7/O8/O27] -> two cached narrow tables,
+INGEST (once per run — DESIGN.md "Parse-on-ingest"): one parse pass
+over the corpus inside the scan stage [O7/O8/O27] -> two cached narrow
+tables,
 ``ingest_pages(url, content_type, n_links, text_sha256, _txt_bad)``
 and ``edges(src_url, pos, child_url, child_host)``. html never enters
 the wave loop.
@@ -20,10 +20,6 @@ One wave = one DataFrame iteration over narrow rows only:
     docs    += typed[doc]                                         [O4]
     metrics += per-(wave, host) counters (one fused shuffle)      [O16, D7]
     checkpoint(queue', archive, docs, metrics, K+1)               [O6]
-
-(preparse=False keeps the original per-wave shape: fetch join against
-the raw corpus, then the parse UDF in the scan stage — for crawls that
-touch a tiny fraction of the corpus.)
 
 Scale notes (the 100TB design point, SURVEY.md section 4; full shuffle
 inventory in DESIGN.md):
@@ -54,9 +50,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from barkingowl_spark.functions.canon import canonicalize, host_of
-from barkingowl_spark.functions.extract import parse_pages_udf
 from barkingowl_spark.operators.dedup import anti_join_new
-from barkingowl_spark.operators.match import matched_by_col, pages_content_type
+from barkingowl_spark.operators.match import matched_by_col
 from barkingowl_spark.operators.ordering import (
     child_discovery_idx,
     first_discovery_wins,
@@ -66,6 +61,25 @@ from barkingowl_spark.operators.ordering import (
 from barkingowl_spark.operators.politeness import robots_filter, schedule_budget
 from barkingowl_spark.session import shuffle_partitions_for
 from barkingowl_spark.sources.tableio import ParquetDirsIO
+
+# Plan constants, read by run_crawl at call time (tests monkeypatch them).
+# Waves of at most this many queue rows are broadcast into the ingest
+# joins (the corpus side never shuffles); bigger waves fall back to
+# shuffle hash join + AQE (the 10^10 path, where the wave itself is too
+# big to ship).
+BROADCAST_WAVE_ROWS = 2_000_000
+# Arrow batch rows for the parse UDF: real pages are tens of KB, so the
+# session-wide 10k-row default would mean ~0.5GB batches per worker.
+ARROW_BATCH_ROWS = 2048
+# Hot-host salt for the frontier-queue write (north_star skew rule): S
+# adapts per wave from the hottest host's queued-row count (SURVEY.md
+# section 4.2 — "S chosen from per-host counts of the previous wave"),
+# fed by the same per-(wave,host) metrics collect the scheduler already
+# does: S = ceil(hottest_host_rows / SALT_TARGET_ROWS), clamped to
+# [1, SALT_MAX].
+SALT_TARGET_ROWS = 1_000_000
+SALT_MAX = 256
+
 
 def salt_for(hot_rows: int, target_rows: int, cap: int) -> int:
     """Adaptive hot-host salt: one salt bucket per ~target_rows rows of
@@ -77,7 +91,6 @@ FRONTIER_COLS = [
     "seed_url", "url", "url_hash", "host", "depth", "discovery_idx",
     "parent_url", "status", "wave", "text_sha256", "matched_by", "doc_type",
 ]
-_HOST_RE = r"^[a-z][a-z0-9+.-]*://([^/]+)"
 
 METRIC_COUNTERS = [
     "pages_fetched", "pages_missing", "links_extracted", "new_urls",
@@ -89,42 +102,12 @@ METRIC_COUNTERS = [
 class CrawlConfig:
     checkpoint_dir: str
     host_budget: int | None = None          # O20; None = oracle-match mode
-    # waves smaller than this are broadcast into the pages/pages_ct joins
-    # (corpus side never shuffles); bigger waves fall back to shuffle hash
-    # join + AQE (the 10^10 path, where the wave itself is too big to ship)
-    broadcast_wave_rows: int = 2_000_000
-    # Parse-on-ingest (the Common-Crawl WAT pattern): the parse UDF's
-    # output per url is wave-independent, so it runs ONCE over the whole
-    # corpus up front and the wave loop joins a cached NARROW
-    # (url, content_type, links, text_sha256) table — html bytes are read
-    # exactly once per run and never enter the wave loop. This is also the
-    # 10^10 design point: link extraction is a corpus-ingest job whose
-    # output is a materialized Iceberg side table (CC publishes WAT link
-    # files for exactly this reason); the frontier iteration is then pure
-    # narrow-row dataflow. False = parse per wave after the fetch join
-    # (only pages actually fetched are parsed — preferable when the crawl
-    # touches a tiny fraction of the corpus).
-    preparse: bool = True
-    # (preparse=False only) cache the (url, html[, text]) fetch projection
-    # instead of re-decoding parquet per wave. Memory-hungry: holds html.
-    cache_corpus: bool = False
-    # Hot-host salt for the frontier-queue write (north_star skew rule):
-    # an int pins S; None (default) adapts S per wave from the hottest
-    # host's queued-row count (SURVEY.md section 4.2 — "S chosen from
-    # per-host counts of the previous wave"), fed by the same
-    # per-(wave,host) metrics collect the scheduler already does:
-    # S = ceil(hottest_host_rows / salt_target_rows), clamped to
-    # [1, salt_max].
-    salt_partitions: int | None = None
-    salt_target_rows: int = 1_000_000
-    salt_max: int = 256
     max_waves: int = 100_000
-    robots: DataFrame | None = None         # F3 dim table; None = off
     # Build the robots dim table FROM THE CORPUS (north_star: "robots.txt
     # caching"): parse http(s)://<host>/robots.txt rows into
     # (host, disallow_prefixes, crawl_delay) once per run
     # (operators/robots.py), cache it, and apply it as the politeness
-    # link filter. Ignored when ``robots`` is supplied explicitly.
+    # link filter. False = no robots rules.
     robots_from_corpus: bool = False
     # Crawl-delay semantics (batch wave model): one wave stands for a
     # politeness window of this many seconds, so a host with
@@ -150,15 +133,6 @@ class CrawlConfig:
     # default plan is byte-identical).
     link_filter: object | None = None
     verify_text: bool = True                # input_hint byte-identity counter
-    # Arrow batch rows for the parse UDF: real pages are tens of KB, so the
-    # session-wide 10k-row default would mean ~0.5GB batches per worker
-    arrow_batch_rows: int = 2048
-
-    def __post_init__(self) -> None:
-        if self.salt_partitions is not None and self.salt_partitions < 1:
-            raise ValueError(
-                "salt_partitions must be >= 1 (or None for adaptive)"
-            )
 
 
 @dataclass
@@ -224,12 +198,11 @@ def _typecheck(candidates: DataFrame, pages_ct: DataFrame,
     post-dedup FRESH rows), so the total join volume over a run is the
     frontier size — that is why child content-type is resolved here and
     not precomputed for every edge at ingest. The caller picks the
-    pages_ct plan: preparse hints shuffle_hash (partition-parallel build,
-    no per-wave driver hash build, the only viable shape at 10^10);
-    un-hinted, Catalyst broadcasts while it fits and falls back to SHJ
-    (preferSortMergeJoin=false session-wide). Spark cannot broadcast the
-    preserved side of an outer join, so the candidate side cannot ship to
-    the corpus scan here."""
+    pages_ct plan: the wave loop hints shuffle_hash (partition-parallel
+    build, no per-wave driver hash build, the only viable shape at
+    10^10); the seed wave passes a broadcast-semi-restricted slice.
+    Spark cannot broadcast the preserved side of an outer join, so the
+    candidate side cannot ship to the corpus scan here."""
     with_cfg = candidates.join(F.broadcast(seeds_cfg), "seed_url")
     c = with_cfg.join(pages_ct, "url", "left")
     mb = matched_by_col(F.col("content_type"), F.col("url"), F.col("doc_type"))
@@ -292,12 +265,12 @@ def run_crawl(
 
     spark.conf.set(
         "spark.sql.execution.arrow.maxRecordsPerBatch",
-        str(config.arrow_batch_rows),
+        str(ARROW_BATCH_ROWS),
     )
     fetch_cols = ["url", "html"] + (["text"] if config.verify_text else [])
     corpus = pages.select(*fetch_cols)
-    robots = config.robots
-    if robots is None and config.robots_from_corpus:
+    robots = None
+    if config.robots_from_corpus:
         # One narrow corpus scan (url filter pushed to parquet; html read
         # only for the ~one-row-per-host robots subset), parsed with pure
         # relational dataflow and CACHED for the run — the wave loop
@@ -308,11 +281,7 @@ def run_crawl(
             StorageLevel.MEMORY_AND_DISK)
         robots.count()
     host_budgets = None
-    if (
-        config.politeness_wave_seconds is not None
-        and robots is not None
-        and "crawl_delay" in robots.columns
-    ):
+    if config.politeness_wave_seconds is not None and robots is not None:
         host_budgets = robots.filter(F.col("crawl_delay") > 0).select(
             "host",
             F.greatest(
@@ -321,49 +290,42 @@ def run_crawl(
                  / F.col("crawl_delay")).cast("int"),
             ).alias("host_budget"),
         )
-    ingest_pages = edges = None
-    if config.preparse:
-        # One corpus scan + one parse pass per run (see CrawlConfig.preparse):
-        # the UDF runs inside the parquet-scan stage, html never leaves it.
-        # Output is TWO narrow cached tables — the wave loop never touches
-        # html, never re-broadcasts a corpus-sized side, and never runs a
-        # UDF again:
-        #   ingest_pages(url, content_type, n_links, text_sha256, _txt_bad)
-        #   edges(src_url, pos, child_url, child_host)
-        # Child content-type is NOT resolved here: joining all ~L*N edges
-        # against pages_ct up front costs an L*N-row shuffle, while the
-        # per-wave typecheck only ever joins each *fresh* URL once
-        # (sum over waves = frontier size << edge count) — see _typecheck.
-        from barkingowl_spark.plans.ingest import (
-            edges_of,
-            ingest_pages_of,
-            parsed_corpus,
-        )
+    # Parse-on-ingest (the Common-Crawl WAT pattern): the parse UDF's
+    # output per url is wave-independent, so it runs ONCE over the whole
+    # corpus, inside the parquet-scan stage — html bytes are read exactly
+    # once per run and never leave that stage. This is also the 10^10
+    # design point: link extraction is a corpus-ingest job whose output
+    # is a materialized Iceberg side table (CC publishes WAT link files
+    # for exactly this reason). Output is TWO narrow cached tables — the
+    # wave loop never touches html, never re-broadcasts a corpus-sized
+    # side, and never runs a UDF again:
+    #   ingest_pages(url, content_type, n_links, text_sha256, _txt_bad)
+    #   edges(src_url, pos, child_url, child_host)
+    # Child content-type is NOT resolved here: joining all ~L*N edges
+    # against pages_ct up front costs an L*N-row shuffle, while the
+    # per-wave typecheck only ever joins each *fresh* URL once
+    # (sum over waves = frontier size << edge count) — see _typecheck.
+    from barkingowl_spark.plans.ingest import (
+        edges_of,
+        ingest_pages_of,
+        parsed_corpus,
+    )
 
-        # parsedc is cached only while the two derived tables materialize —
-        # otherwise the parse pass would run once per derived table
-        parsedc = parsed_corpus(corpus, config.verify_text).persist(
-            StorageLevel.MEMORY_AND_DISK)
-        ingest_pages = ingest_pages_of(parsedc).persist(
-            StorageLevel.MEMORY_AND_DISK)
-        pages_ct = ingest_pages.select("url", "content_type")
-        edges = edges_of(parsedc).persist(StorageLevel.MEMORY_AND_DISK)
-        _t_ing = time.monotonic()
-        ingest_pages.count()   # parse runs exactly once, here
-        edges.count()          # from cached parsedc
-        parsedc.unpersist()
-        if os.environ.get("BOW_TIMING") == "1":
-            print(f"BOW_TIMING ingest={time.monotonic() - _t_ing:.2f}",
-                  flush=True)
-    else:
-        if config.cache_corpus:
-            corpus = corpus.persist(StorageLevel.MEMORY_AND_DISK)
-        # Narrow (url, content_type) meta table, computed ONCE per run and
-        # cached: the per-wave typecheck join must not re-read the corpus
-        # html column every wave (at the 10^10 design point this is a
-        # materialized Iceberg side table refreshed with corpus ingests —
-        # DESIGN.md).
-        pages_ct = pages_content_type(corpus).persist()
+    # parsedc is cached only while the two derived tables materialize —
+    # otherwise the parse pass would run once per derived table
+    parsedc = parsed_corpus(corpus, config.verify_text).persist(
+        StorageLevel.MEMORY_AND_DISK)
+    ingest_pages = ingest_pages_of(parsedc).persist(
+        StorageLevel.MEMORY_AND_DISK)
+    pages_ct = ingest_pages.select("url", "content_type")
+    edges = edges_of(parsedc).persist(StorageLevel.MEMORY_AND_DISK)
+    _t_ing = time.monotonic()
+    ingest_pages.count()   # parse runs exactly once, here
+    edges.count()          # from cached parsedc
+    parsedc.unpersist()
+    if os.environ.get("BOW_TIMING") == "1":
+        print(f"BOW_TIMING ingest={time.monotonic() - _t_ing:.2f}",
+              flush=True)
 
     def _load(wave: int) -> CrawlState:
         return CrawlState(
@@ -414,29 +376,24 @@ def run_crawl(
     # Adaptive-salt ledger (SURVEY.md section 4.2): per-host queued-row
     # counts maintained driver-side from the SAME per-(wave,host) metrics
     # collect the scheduler already does — no extra jobs per wave. Entries
-    # below salt_target_rows/8 are pruned so the ledger stays O(hot hosts)
+    # below SALT_TARGET_ROWS/8 are pruned so the ledger stays O(hot hosts)
     # at the 10^10 design point (at most frontier_rows/threshold entries
     # can exceed the threshold); a pruned host re-earns its entry with its
     # next big wave — the write-layout heuristic needs the hot tail, not
     # exactness.
-    host_led: dict[str, int] = {}
-    salt_prune = max(1, config.salt_target_rows // 8)
-    if config.salt_partitions is None:
-        # threshold applied IN the plan: only the hot tail (at most
-        # queue_rows/salt_prune hosts) ever reaches the driver
-        host_led = {
-            r["host"]: r["n"]
-            for r in state.queue.groupBy("host")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") >= F.lit(salt_prune))
-            .collect()
-        }
-        cur_salt = salt_for(
-            max(host_led.values(), default=0),
-            config.salt_target_rows, config.salt_max,
-        )
-    else:
-        cur_salt = config.salt_partitions
+    salt_prune = max(1, SALT_TARGET_ROWS // 8)
+    # threshold applied IN the plan: only the hot tail (at most
+    # queue_rows/salt_prune hosts) ever reaches the driver
+    host_led: dict[str, int] = {
+        r["host"]: r["n"]
+        for r in state.queue.groupBy("host")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") >= F.lit(salt_prune))
+        .collect()
+    }
+    cur_salt = salt_for(
+        max(host_led.values(), default=0), SALT_TARGET_ROWS, SALT_MAX,
+    )
     if os.environ.get("BOW_TIMING") == "1":
         print(f"BOW_TIMING preloop_total={time.monotonic() - _t_pre:.2f}",
               flush=True)
@@ -461,101 +418,49 @@ def run_crawl(
         # full level membership (queued + already fetched) -> stable ranks
         ranks = level_ranks(state.frontier(), d)
 
-        small_wave = queue_rows <= config.broadcast_wave_rows
-        # only the columns the parse pass carries through — keeps the
-        # broadcast (or shuffle) of the wave side narrow
-        sched_j = sched.select(
+        # the wave probes the two cached NARROW ingest tables — no html,
+        # no UDF, and no corpus-sized broadcast build in the loop (the
+        # broadcast side is always the wave itself); only the columns the
+        # fetched rows carry, so the wave side ships narrow
+        small_wave = queue_rows <= BROADCAST_WAVE_ROWS
+        sched_r = sched.select(
             "seed_url", "url", "url_hash", "host", "depth", "discovery_idx",
             "parent_url", "wave",
+        ).join(ranks, ["seed_url", "url_hash"])
+        if small_wave:
+            parsed = ingest_pages.join(
+                F.broadcast(sched_r), "url", "inner"
+            ).persist()
+        else:
+            parsed = sched_r.join(
+                ingest_pages.hint("shuffle_hash"), "url", "inner"
+            ).persist()
+        wave_parents = parsed.select(
+            F.col("url").alias("src_url"), "seed_url", "parent_rank"
         )
-        if config.preparse:
-            # the wave probes the two cached NARROW ingest tables — no
-            # html, no UDF, and no corpus-sized broadcast build in the
-            # loop (the broadcast side is always the wave itself)
-            sched_r = sched_j.join(ranks, ["seed_url", "url_hash"])
-            if small_wave:
-                parsed = ingest_pages.join(
-                    F.broadcast(sched_r), "url", "inner"
-                ).persist()
-            else:
-                parsed = sched_r.join(
-                    ingest_pages.hint("shuffle_hash"), "url", "inner"
-                ).persist()
-            wave_parents = parsed.select(
-                F.col("url").alias("src_url"), "seed_url", "parent_rank"
-            )
-            if small_wave:
-                raw_links = edges.join(
-                    F.broadcast(wave_parents), "src_url", "inner"
-                )
-            else:
-                raw_links = wave_parents.join(
-                    edges.hint("shuffle_hash"), "src_url", "inner"
-                )
-            links = (
-                raw_links.select(
-                    "seed_url",
-                    F.col("src_url").alias("parent_url"),
-                    "parent_rank", "pos",
-                    F.col("child_url").alias("url"),
-                    F.col("child_host").alias("host"),
-                )
-                .join(
-                    F.broadcast(seeds_cfg.select("seed_url", "seed_host")),
-                    "seed_url",
-                )
-                .filter(F.col("host") == F.col("seed_host"))  # O9
-                .drop("seed_host")
+        if small_wave:
+            raw_links = edges.join(
+                F.broadcast(wave_parents), "src_url", "inner"
             )
         else:
-            if small_wave:
-                # ship the wave to the corpus scan; pages never shuffles
-                fetched = corpus.join(F.broadcast(sched_j), "url", "inner")
-            else:
-                fetched = sched_j.join(
-                    corpus.hint("shuffle_hash"), "url", "inner"
-                )
-            # The parse UDF runs IN the corpus-scan stage: html bytes never
-            # shuffle (at 10^10 scale shuffling page bodies would dwarf
-            # every other cost). Parse is per-row pure, and scan partitions
-            # are uniform in BYTES regardless of host, so host skew cannot
-            # unbalance this stage — the north_star's salted host-hash
-            # repartition is applied to the narrow frontier rows instead
-            # (queue write below + the dedup/window shuffles). Parse
-            # parallelism therefore equals scan parallelism: size
-            # spark.sql.files.maxPartitionBytes so the pages scan yields
-            # several partitions per core (bench sets 16MB for the sandbox
-            # corpus; an Iceberg deployment gets it from bucket(N, url)).
-            parsed = fetched.withColumn(
-                "p", parse_pages_udf(F.col("url"), F.col("html"))
-            ).select(
-                "seed_url", "url", "url_hash", "host", "depth",
-                "discovery_idx", "parent_url", "wave",
-                F.col("p.links").alias("links"),
-                F.sha2(F.col("p.text").cast("binary"), 256).alias(
-                    "text_sha256"),
-                *(
-                    [(F.col("p.text") != F.col("text")).cast("long")
-                     .alias("_txt_bad")]
-                    if config.verify_text
-                    else [F.lit(0).cast("long").alias("_txt_bad")]
-                ),
-            ).join(ranks, ["seed_url", "url_hash"]).persist()
-
-            links = (
-                parsed.select(
-                    "seed_url",
-                    F.col("url").alias("parent_url"),
-                    "parent_rank",
-                    F.posexplode("links").alias("pos", "url"),
-                )
-                .filter(F.col("url").isNotNull())  # O11 junk null-kept for pos
-                .withColumn("host", F.regexp_extract("url", _HOST_RE, 1))
-                .join(F.broadcast(seeds_cfg.select("seed_url", "seed_host")),
-                      "seed_url")
-                .filter(F.col("host") == F.col("seed_host"))  # O9
-                .drop("seed_host")
+            raw_links = wave_parents.join(
+                edges.hint("shuffle_hash"), "src_url", "inner"
             )
+        links = (
+            raw_links.select(
+                "seed_url",
+                F.col("src_url").alias("parent_url"),
+                "parent_rank", "pos",
+                F.col("child_url").alias("url"),
+                F.col("child_host").alias("host"),
+            )
+            .join(
+                F.broadcast(seeds_cfg.select("seed_url", "seed_host")),
+                "seed_url",
+            )
+            .filter(F.col("host") == F.col("seed_host"))  # O9
+            .drop("seed_host")
+        )
         links = robots_filter(links, robots)
         if config.link_filter is not None:
             links = config.link_filter(links)
@@ -578,13 +483,11 @@ def run_crawl(
         seen_keys = state.frontier().select("seed_url", "url_hash")
         fresh = anti_join_new(deduped, seen_keys)
         typed = _typecheck(
-            # preparse: pages_ct is a cached corpus-sized projection that
-            # grows no hash-build on the driver — shuffle-hash keeps the
-            # per-wave build partition-parallel (same rationale as the
-            # seen anti-join; it is also the only viable plan at 10^10)
-            fresh,
-            pages_ct.hint("shuffle_hash") if config.preparse else pages_ct,
-            seeds_cfg,
+            # pages_ct is a cached corpus-sized projection that must grow
+            # no hash-build on the driver — shuffle-hash keeps the per-wave
+            # build partition-parallel (same rationale as the seen
+            # anti-join; it is also the only viable plan at 10^10)
+            fresh, pages_ct.hint("shuffle_hash"), seeds_cfg,
         ).persist()
         t_typed = time.monotonic()
 
@@ -625,8 +528,7 @@ def run_crawl(
         m_parent = parsed.select(
             "host",
             F.lit(1).cast("long").alias("pages_fetched"),
-            (F.col("n_links") if config.preparse else F.size("links"))
-            .cast("long").alias("links_extracted"),
+            F.col("n_links").cast("long").alias("links_extracted"),
             F.col("_txt_bad").cast("long").alias("text_mismatch"),
             _z.alias("pages_missing"), _z.alias("new_urls"),
             _z.alias("new_queued"), _z.alias("docs_found"),
@@ -657,23 +559,19 @@ def run_crawl(
         # job per wave for all metrics work, zero persists.
         from pyspark.sql import Observation
 
+        is_tail = (
+            F.col("new_queued") - F.col("pages_fetched") >= F.lit(salt_prune)
+        )
+        if host_led:
+            is_tail = is_tail | F.col("host").isin(list(host_led))
         obs_aggs = [
             F.sum("pages_fetched").alias("fetched"),
             F.sum("new_queued").alias("queued"),
+            F.collect_list(  # nulls (non-tail rows) are skipped
+                F.when(is_tail, F.struct(
+                    "host", "new_queued", "pages_fetched"))
+            ).alias("hot_tail"),
         ]
-        if config.salt_partitions is None:
-            is_tail = (
-                F.col("new_queued") - F.col("pages_fetched")
-                >= F.lit(salt_prune)
-            )
-            if host_led:
-                is_tail = is_tail | F.col("host").isin(list(host_led))
-            obs_aggs.append(
-                F.collect_list(  # nulls (non-tail rows) are skipped
-                    F.when(is_tail, F.struct(
-                        "host", "new_queued", "pages_fetched"))
-                ).alias("hot_tail")
-            )
         obs = Observation()
         # metrics rows are ~bytes/host: coalesce the write to the same
         # row-scaled file count as the queue (1 in the sandbox; grows with
@@ -688,23 +586,21 @@ def run_crawl(
         new_queued_total = int(totals["queued"] or 0)
         due_remaining -= sched_total
         children += new_queued_total
-        if config.salt_partitions is None:
-            for r in totals.get("hot_tail") or []:
-                c = (host_led.get(r["host"], 0)
-                     + r["new_queued"] - r["pages_fetched"])
-                if c >= salt_prune:
-                    host_led[r["host"]] = c
-                else:
-                    host_led.pop(r["host"], None)
-            cur_salt = salt_for(
-                max(host_led.values(), default=0),
-                config.salt_target_rows, config.salt_max,
-            )
+        for r in totals.get("hot_tail") or []:
+            c = (host_led.get(r["host"], 0)
+                 + r["new_queued"] - r["pages_fetched"])
+            if c >= salt_prune:
+                host_led[r["host"]] = c
+            else:
+                host_led.pop(r["host"], None)
+        cur_salt = salt_for(
+            max(host_led.values(), default=0), SALT_TARGET_ROWS, SALT_MAX,
+        )
 
         n_out = max(1, min(default_par, queue_rows // 250_000 + 1))
         # frontier rows repartition by (host, salted hash) — north_star's
         # skew rule, applied to the narrow queue (hot hosts split over
-        # salt_partitions buckets; the politeness window reads this back
+        # cur_salt buckets; the politeness window reads this back
         # host-clustered next wave)
         io.write_wave(
             wave,
@@ -730,13 +626,8 @@ def run_crawl(
                 f"load={time.monotonic() - t_write:.2f}",
                 flush=True,
             )
-    if config.preparse:
-        ingest_pages.unpersist()
-        edges.unpersist()
-    else:
-        pages_ct.unpersist()
-        if config.cache_corpus:
-            corpus.unpersist()
-    if robots is not None and config.robots is None:
-        robots.unpersist()  # the corpus-built cache, not a caller's dim
+    ingest_pages.unpersist()
+    edges.unpersist()
+    if robots is not None:
+        robots.unpersist()
     return state

@@ -37,10 +37,6 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--budget", type=int, default=None)
     p.add_argument("--resume", action="store_true")
     p.add_argument("--max-waves", type=int, default=100_000)
-    p.add_argument("--no-preparse", action="store_true",
-                   help="parse per wave after the fetch join instead of one "
-                        "ingest pass (for crawls touching a tiny corpus "
-                        "fraction)")
     p.add_argument("--robots", action="store_true",
                    help="parse robots.txt rows out of the corpus and apply "
                         "disallow prefixes (and Crawl-delay with "
@@ -108,7 +104,6 @@ def main(argv: list[str] | None = None) -> None:
             link_filter=link_filter,
             checkpoint_dir=args.checkpoint,
             host_budget=args.budget,
-            preparse=not args.no_preparse,
             max_waves=args.max_waves,
             robots_from_corpus=args.robots,
             politeness_wave_seconds=args.politeness_seconds,

@@ -139,6 +139,21 @@ def test_doc_corrupt_and_seams():
         extract_doc_text(bytes(longer))
 
 
+def test_doc_truncated_clx_is_value_error():
+    """A Clx cut inside a Prc header (lcbClx 2) or inside the Pcdt
+    header (lcbClx 9: the 7-byte Prc, then 2 of the Pcdt's 5 header
+    bytes) is corrupt input: ValueError, not a raw struct.error that
+    doc_texts cannot contain per payload."""
+    p = build_doc([("some text\r", True)])
+    w = read_cfb_stream(p, "WordDocument")
+    i = p.find(w[:16])
+    for lcb_clx in (2, 9):
+        bad = bytearray(p)
+        struct.pack_into("<I", bad, i + 0x1A6, lcb_clx)
+        with pytest.raises(ValueError, match="corrupt .doc"):
+            extract_doc_text(bytes(bad))
+
+
 def test_doc_texts_spark(spark):
     from barkingowl_spark.operators.multimodal import (
         doc_table,
@@ -214,6 +229,25 @@ def test_xls_biff8_cells():
     struct.pack_into("<I", bad, i + 6, 99)
     with pytest.raises(ValueError, match="out of range"):
         extract_xls_cells(build_cfb([("Workbook", bytes(bad))]))
+
+
+def test_xls_truncated_records_are_value_error():
+    """Short SST and LABELSST bodies, and an SST entry cut before its
+    rich-run count, are corrupt input: ValueError, not a raw
+    struct.error that xls_cells cannot contain per payload."""
+    from barkingowl_spark.functions.xlsbiff import build_xls, extract_xls_cells
+
+    bof = read_cfb_stream(build_xls([("A1", "x")]), "Workbook")[:20]
+
+    def rec(rid: int, body: bytes) -> bytes:
+        return struct.pack("<HH", rid, len(body)) + body
+
+    rich_cut = struct.pack("<ii", 1, 1) + struct.pack("<HB", 1, 0x08)
+    for body in (rec(0x00FC, b"\0" * 4),       # SST: 4 of 8 header bytes
+                 rec(0x00FC, rich_cut),        # SST entry: no cRun
+                 rec(0x00FD, b"\0" * 6)):      # LABELSST: 6 of 10 bytes
+        with pytest.raises(ValueError, match="corrupt BIFF record"):
+            extract_xls_cells(build_cfb([("Workbook", bof + body)]))
 
 
 def test_xls_cells_spark(spark):

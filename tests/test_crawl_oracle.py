@@ -56,22 +56,6 @@ def crawl_state(spark, seeds_df, pages_df, tmp_path_factory):
     return run_crawl(spark, seeds_df, pages_df, cfg)
 
 
-def test_preparse_off_identical_outputs(spark, seeds_df, pages_df,
-                                        fixture_data, tmp_path_factory):
-    """The per-wave-parse fallback (preparse=False) must produce the
-    exact same trace/documents/text hashes as the default ingest path."""
-    cfg = CrawlConfig(
-        checkpoint_dir=str(tmp_path_factory.mktemp("ckpt_np")),
-        preparse=False,
-    )
-    state = run_crawl(spark, seeds_df, pages_df, cfg)
-    s_traces, s_docs, s_texts = spark_outputs(state)
-    o_traces, o_docs, o_texts = oracle_outputs(fixture_data)
-    assert s_traces == o_traces
-    assert s_docs == o_docs
-    assert s_texts == o_texts
-
-
 def test_trace_matches_oracle(crawl_state, fixture_data):
     o_traces, _, _ = oracle_outputs(fixture_data)
     s_traces, _, _ = spark_outputs(crawl_state)
@@ -171,14 +155,22 @@ def test_salt_for_clamps():
 
 
 def test_adaptive_salt_identical_outputs(spark, seeds_df, pages_df,
-                                         fixture_data, tmp_path_factory):
-    """Adaptive per-wave salt (salt_partitions=None with a tiny
-    salt_target_rows, so S actually varies wave to wave) only changes
-    the queue write LAYOUT — trace/documents/texts must still match the
-    oracle exactly."""
+                                         fixture_data, tmp_path_factory,
+                                         monkeypatch):
+    """Two layout-only plan paths in one crawl, both checked against the
+    oracle: the adaptive per-wave salt (a tiny SALT_TARGET_ROWS, so S
+    actually varies wave to wave) only changes the queue write LAYOUT,
+    and BROADCAST_WAVE_ROWS=0 sends every wave down the big-wave path
+    (shuffle-hash joins of the wave against ingest_pages and edges, the
+    10^10 shape) instead of broadcasting it. Trace/documents/texts must
+    still match the oracle exactly."""
+    import barkingowl_spark.plans.crawl as crawl_mod
+
+    monkeypatch.setattr(crawl_mod, "SALT_TARGET_ROWS", 2)
+    monkeypatch.setattr(crawl_mod, "SALT_MAX", 4)
+    monkeypatch.setattr(crawl_mod, "BROADCAST_WAVE_ROWS", 0)
     cfg = CrawlConfig(
         checkpoint_dir=str(tmp_path_factory.mktemp("ckpt_salt")),
-        salt_partitions=None, salt_target_rows=2, salt_max=4,
     )
     state = run_crawl(spark, seeds_df, pages_df, cfg)
     s_traces, s_docs, s_texts = spark_outputs(state)

@@ -12,8 +12,10 @@ import zipfile
 import pytest
 
 from barkingowl_spark.functions.zipwalk import (
+    ZIP_EOCD,
     build_zip,
     list_zip_members,
+    read_zip_member,
 )
 
 MS = [("a.txt", b"hello world" * 20, 0),
@@ -72,6 +74,20 @@ def test_comment_tail_and_corrupt_rejection():
     bad[30 + len("a.txt")] ^= 0xFF
     got = list_zip_members(bytes(bad))
     assert [c for *_, c in got] == [False, True, True]
+
+
+def test_read_member_truncated_or_bad_deflate_is_value_error():
+    """read_zip_member turns a truncated EOCD record and a corrupt
+    deflate body into ValueError, like list_zip_members: the Spark
+    operators built on it contain only ValueError/NotImplementedError
+    per payload, so a raw struct.error / zlib.error would fail the
+    whole task."""
+    with pytest.raises(ValueError, match="corrupt ZIP"):
+        read_zip_member(ZIP_EOCD + b"\0" * 6, "x")
+    bad = bytearray(build_zip([("a.txt", b"hello world" * 20, 8)]))
+    bad[30 + len("a.txt")] = 0xFF  # deflate block type 3 (reserved)
+    with pytest.raises(ValueError, match="bad deflate member"):
+        read_zip_member(bytes(bad), "a.txt")
 
 
 def test_declared_seams():
