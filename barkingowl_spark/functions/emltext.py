@@ -21,7 +21,8 @@ The deterministic core:
   * multipart/*: the boundary walk (preamble/epilogue dropped,
     nested multiparts recursed); text extraction returns the FIRST
     text/plain part's decoded text (the mailing-list convention),
-    falling back to a lone text/* part.
+    falling back to the first text/* part (e.g. an html-only
+    message) when no part is text/plain.
   * build_eml: the fixture writer — singlepart or multipart with
     caller-chosen per-part transfer encodings, RFC 2047 B-encoded
     subjects when non-ASCII.
@@ -135,7 +136,10 @@ def _decode_body(body: bytes, cte: str, cs: str) -> str:
     return raw.decode(cs)
 
 
-def _first_text_plain(headers: dict, body: bytes) -> str | None:
+def _leaf_parts(headers: dict, body: bytes):
+    """Yield (mime, params, headers, body) for every non-multipart part,
+    in document order (lazily: a caller that stops early parses no
+    later part)."""
     mime, params = _ct_params(
         headers.get("content-type", "text/plain"))
     if mime.startswith("multipart/"):
@@ -159,30 +163,39 @@ def _first_text_plain(headers: dict, body: bytes) -> str | None:
                 part = part[:-2]
             elif part.endswith(b"\n"):
                 part = part[:-1]
-            ph, pb = parse_headers(part)
-            got = _first_text_plain(ph, pb)
-            if got is not None:
-                return got
+            yield from _leaf_parts(*parse_headers(part))
+        return
+    yield mime, params, headers, body
+
+
+def _first_text(headers: dict, body: bytes) -> str | None:
+    """Decoded text of the first text/plain part, else of the first
+    text/* part, else None."""
+    chosen = None
+    for mime, params, ph, pb in _leaf_parts(headers, body):
+        if mime == "text/plain":
+            chosen = (params, ph, pb)
+            break
+        if chosen is None and mime.startswith("text/"):
+            chosen = (params, ph, pb)
+    if chosen is None:
         return None
-    if mime == "text/plain" or (mime.startswith("text/")
-                                and "content-type" not in headers):
-        cs = _charset(params.get("charset", "us-ascii"))
-        return _decode_body(
-            body, headers.get("content-transfer-encoding", ""), cs)
-    return None
+    params, ph, pb = chosen
+    cs = _charset(params.get("charset", "us-ascii"))
+    return _decode_body(pb, ph.get("content-transfer-encoding", ""), cs)
 
 
 def extract_eml_text(
     payload: bytes,
 ) -> tuple[str, str, str]:
     """payload -> (subject, from_addr, text): RFC 2047-decoded
-    Subject/From and the first text/plain body (decoded through its
-    transfer encoding + charset); text is '' when the message
-    carries no text part."""
+    Subject/From and the first text/plain body, else the first
+    text/* body (decoded through its transfer encoding + charset);
+    text is '' when the message carries no text part."""
     headers, body = parse_headers(payload)
     subject = decode_header_value(headers.get("subject", ""))
     sender = decode_header_value(headers.get("from", ""))
-    text = _first_text_plain(headers, body)
+    text = _first_text(headers, body)
     return subject, sender, text if text is not None else ""
 
 

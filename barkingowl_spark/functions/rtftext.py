@@ -11,7 +11,8 @@ The deterministic core of the RTF 1.x grammar:
     restored per group, as the spec requires;
   * control words \\word with optional signed numeric parameter and
     the optional single-space delimiter (consumed, per spec);
-    \\par and \\line break paragraphs/lines, \\tab maps to TAB,
+    \\par ends a paragraph (n_paras counts them) and \\line is a
+    newline inside one (both emit '\\n'), \\tab maps to TAB,
     \\~ to space, and the escapes \\\\ \\{ \\} to their literals;
   * \\'hh hex-escaped bytes decoded as cp1252 (the \\ansi default);
   * \\uN unicode code points (negative N is N + 65536, the signed
@@ -42,7 +43,9 @@ _WORD_MAP = {"par": "\n", "line": "\n", "tab": "\t",
 
 
 def extract_rtf_text(payload: bytes) -> tuple[int, str]:
-    """payload -> (n_paras, text): paragraphs split on \\par."""
+    """payload -> (n_paras, text): paragraphs end at \\par (a final
+    unterminated run of text is one more); text joins them with '\\n'
+    and keeps each \\line as an in-paragraph '\\n'."""
     try:
         s = payload.decode("cp1252")
     except UnicodeDecodeError as e:
@@ -57,14 +60,18 @@ def extract_rtf_text(payload: bytes) -> tuple[int, str]:
     uc_stack: list[int] = []
     skip_depth: int | None = None
     pending_skip = 0  # \ucN fallback chars to consume after \uN
+    n_par = 0
+    par_end = 0  # len(out) just after the last emitted \par
 
-    def emit(ch: str) -> None:
+    def emit(ch: str) -> bool:
         nonlocal pending_skip
         if pending_skip > 0:
             pending_skip -= 1
-            return
+            return False
         if skip_depth is None:
             out.append(ch)
+            return True
+        return False
 
     while i < n:
         c = s[i]
@@ -133,7 +140,9 @@ def extract_rtf_text(payload: bytes) -> tuple[int, str]:
                     if skip_depth is None:
                         skip_depth = depth
                 elif word in _WORD_MAP:
-                    emit(_WORD_MAP[word])
+                    if emit(_WORD_MAP[word]) and word == "par":
+                        n_par += 1
+                        par_end = len(out)
                 # every other control word is ignorable per spec
                 i = k
             else:
@@ -146,11 +155,11 @@ def extract_rtf_text(payload: bytes) -> tuple[int, str]:
             i += 1
     if depth != 0:
         raise ValueError("unbalanced RTF group open")
-    text = "".join(out)
-    paras = text.split("\n")
-    if paras and paras[-1] == "":
-        paras.pop()  # trailing \par closes the last paragraph
-    return len(paras), "\n".join(paras)
+    if out and par_end == len(out):
+        out.pop()  # trailing \par closes the last paragraph
+    elif len(out) > par_end:
+        n_par += 1  # unterminated last paragraph
+    return n_par, "".join(out)
 
 
 def build_rtf(paras: list[str]) -> bytes:

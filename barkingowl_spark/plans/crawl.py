@@ -1,8 +1,9 @@
 """The crawl wave loop — SURVEY.md section 3.2 (O5/O6/O13/O14/O16/O21/O22, D7/D8).
 
-INGEST (once per run — DESIGN.md "Parse-on-ingest"): one parse pass
-over the corpus inside the scan stage [O7/O8/O27] -> two cached narrow
-tables,
+INGEST (once per run that fetches a wave — DESIGN.md "Parse-on-ingest";
+a resume whose checkpoint has no wave left returns the checkpoint
+without it): one parse pass over the corpus inside the scan stage
+[O7/O8/O27] -> two cached narrow tables,
 ``ingest_pages(url, content_type, n_links, text_sha256, _txt_bad)``
 and ``edges(src_url, pos, child_url, child_host)``. html never enters
 the wave loop.
@@ -44,6 +45,7 @@ from __future__ import annotations
 
 import os
 import time
+from collections import Counter
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -163,8 +165,15 @@ class CrawlState:
         )
 
 
-def _seeds_cfg(spark: SparkSession, seeds: DataFrame) -> DataFrame:
-    """Canonicalized seed config for the broadcast config join (O14).
+SEEDS_CFG_SCHEMA = (
+    "seed_url string, seed_host string, max_link_level int, "
+    "doc_type string, seed_idx int"
+)
+
+
+def _seed_rows(seeds: DataFrame) -> list[tuple]:
+    """Canonicalized seed config rows (SEEDS_CFG_SCHEMA) for the
+    broadcast config join (O14).
 
     Seeds are tiny (driver-side canonicalization mirrors the oracle's)."""
     rows = seeds.collect()
@@ -183,10 +192,7 @@ def _seeds_cfg(spark: SparkSession, seeds: DataFrame) -> DataFrame:
             (canon, host_of(canon), int(r["max_link_level"]), r["doc_type"],
              int(r["seed_idx"]))
         )
-    return spark.createDataFrame(
-        out, "seed_url string, seed_host string, max_link_level int, "
-             "doc_type string, seed_idx int",
-    )
+    return out
 
 
 def _typecheck(candidates: DataFrame, pages_ct: DataFrame,
@@ -260,7 +266,38 @@ def run_crawl(
             config.checkpoint_dir,
             compact_every=config.archive_compact_every,
         )
-    seeds_cfg = _seeds_cfg(spark, seeds)
+
+    def _load(wave: int) -> CrawlState:
+        return CrawlState(
+            queue=io.read_queue(spark, wave),
+            archive=io.read_archive(spark, wave),
+            metrics=io.read_metrics(spark, wave),
+            wave=wave,
+        )
+
+    # driver-side level-sync scheduler state (SURVEY.md O18/O20): depth d is
+    # fetched until exhausted, children accumulate at d+1. Maintained from
+    # the per-wave metrics collect — no extra min/count jobs per wave. A
+    # resume reads it from the checkpoint before anything else is built.
+    start_wave = io.latest_wave() if resume else None
+    if start_wave is not None:
+        state = _load(start_wave)
+        sched_meta = io.read_meta(start_wave).get("sched")
+        if sched_meta is None:  # resumed at wave 0 (only seeds committed)
+            d, due_remaining, children = 0, state.queue.count(), 0
+        else:
+            d, due_remaining, children = (
+                sched_meta["d"], sched_meta["due"], sched_meta["children"],
+            )
+        # the wave loop's own exit test, before any job: a checkpoint with
+        # nothing due at d or d+1, or at the wave cap, is the final state —
+        # return it before the seeds collect, robots dim, corpus parse and
+        # ledger job, none of which it needs
+        if (state.wave >= config.max_waves
+                or (due_remaining <= 0 and children <= 0)):
+            return state
+    seed_rows = _seed_rows(seeds)
+    seeds_cfg = spark.createDataFrame(seed_rows, SEEDS_CFG_SCHEMA)
     from pyspark import StorageLevel
 
     spark.conf.set(
@@ -327,28 +364,7 @@ def run_crawl(
         print(f"BOW_TIMING ingest={time.monotonic() - _t_ing:.2f}",
               flush=True)
 
-    def _load(wave: int) -> CrawlState:
-        return CrawlState(
-            queue=io.read_queue(spark, wave),
-            archive=io.read_archive(spark, wave),
-            metrics=io.read_metrics(spark, wave),
-            wave=wave,
-        )
-
-    # driver-side level-sync scheduler state (SURVEY.md O18/O20): depth d is
-    # fetched until exhausted, children accumulate at d+1. Maintained from
-    # the per-wave metrics collect — no extra min/count jobs per wave.
-    start_wave = io.latest_wave() if resume else None
-    if resume and start_wave is not None:
-        state = _load(start_wave)
-        sched_meta = io.read_meta(start_wave).get("sched")
-        if sched_meta is None:  # resumed at wave 0 (only seeds committed)
-            d, due_remaining, children = 0, state.queue.count(), 0
-        else:
-            d, due_remaining, children = (
-                sched_meta["d"], sched_meta["due"], sched_meta["children"],
-            )
-    else:
+    if start_wave is None:
         _t_seed = time.monotonic()
         typed0 = _seed_frontier_rows(pages_ct, seeds_cfg)
         queue0 = typed0.filter(F.col("status") == "queued").select(
@@ -382,15 +398,22 @@ def run_crawl(
     # next big wave — the write-layout heuristic needs the hot tail, not
     # exactness.
     salt_prune = max(1, SALT_TARGET_ROWS // 8)
-    # threshold applied IN the plan: only the hot tail (at most
-    # queue_rows/salt_prune hosts) ever reaches the driver
-    host_led: dict[str, int] = {
-        r["host"]: r["n"]
-        for r in state.queue.groupBy("host")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= F.lit(salt_prune))
-        .collect()
-    }
+    host_led: dict[str, int] = {}
+    # a fresh crawl's queue is a subset of the canonical seed rows already
+    # collected in seed_rows: if no seed host reaches salt_prune, the ledger
+    # is empty and the job below would return nothing
+    if start_wave is not None or max(
+        Counter(r[1] for r in seed_rows).values(), default=0,
+    ) >= salt_prune:
+        # threshold applied IN the plan: only the hot tail (at most
+        # queue_rows/salt_prune hosts) ever reaches the driver
+        host_led = {
+            r["host"]: r["n"]
+            for r in state.queue.groupBy("host")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .filter(F.col("n") >= F.lit(salt_prune))
+            .collect()
+        }
     cur_salt = salt_for(
         max(host_led.values(), default=0), SALT_TARGET_ROWS, SALT_MAX,
     )

@@ -80,6 +80,29 @@ def test_header_machinery():
         decode_header_value("=?koi8-r?B?0NLJ18XU?=")
 
 
+def test_text_star_fallback_when_no_text_plain():
+    """With no text/plain part anywhere, the first text/* part is the
+    text (an html-only message, single-part or behind a non-text
+    decoy); a text/plain part still wins over an earlier text/html."""
+    html = (b"Subject: h\r\nContent-Type: text/html; charset=utf-8\r\n"
+            b"Content-Transfer-Encoding: quoted-printable\r\n\r\n"
+            b"<p>caf=C3=A9</p>")
+    assert extract_eml_text(html) == ("h", "", "<p>café</p>")
+    mp = (b"Subject: m\r\n"
+          b'Content-Type: multipart/mixed; boundary="b"\r\n\r\n'
+          b"--b\r\nContent-Type: application/octet-stream\r\n\r\n"
+          b"\x00\x01\r\n"
+          b"--b\r\nContent-Type: text/html\r\n\r\n<b>first</b>\r\n"
+          b"--b\r\nContent-Type: text/enriched\r\n\r\nsecond\r\n"
+          b"--b--\r\n")
+    assert extract_eml_text(mp)[2] == "<b>first</b>"
+    with_plain = mp.replace(b"text/enriched", b"text/plain")
+    assert extract_eml_text(with_plain)[2] == "second"
+    assert email.message_from_bytes(
+        with_plain, policy=email.policy.default).get_body(
+        preferencelist=("plain",)).get_content().rstrip() == "second"
+
+
 def test_corrupt_rejection_and_seams():
     with pytest.raises(ValueError, match="separator"):
         extract_eml_text(b"Subject: no body separator")

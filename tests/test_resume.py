@@ -23,15 +23,41 @@ def _key_outputs(state):
 
 
 def test_resume_reproduces_uninterrupted_run(spark, seeds_df, pages_df,
-                                             tmp_path_factory):
-    full_cfg = CrawlConfig(checkpoint_dir=str(tmp_path_factory.mktemp("full")))
-    full = run_crawl(spark, seeds_df, pages_df, full_cfg)
+                                             tmp_path_factory, monkeypatch):
+    full_dir = str(tmp_path_factory.mktemp("full"))
+    full = run_crawl(spark, seeds_df, pages_df,
+                     CrawlConfig(checkpoint_dir=full_dir))
 
     part_dir = str(tmp_path_factory.mktemp("part"))
     part_cfg = CrawlConfig(checkpoint_dir=part_dir, max_waves=2)
     interrupted = run_crawl(spark, seeds_df, pages_df, part_cfg)
     assert interrupted.wave == 2  # stopped mid-crawl
 
+    # A checkpoint with no wave left (the finished crawl; the interrupted
+    # one at its own wave cap) is returned from the checkpoint alone: the
+    # corpus parse and the robots dim must not run. robots_from_corpus
+    # makes the robots build reachable; with no wave it cannot change the
+    # outputs.
+    import barkingowl_spark.operators.robots as robots_mod
+    import barkingowl_spark.plans.ingest as ingest_mod
+
+    def _no_ingest(*a, **kw):
+        raise AssertionError("a resume with no wave left ran the ingest")
+
+    with monkeypatch.context() as m:
+        m.setattr(ingest_mod, "parsed_corpus", _no_ingest)
+        m.setattr(robots_mod, "robots_rules", _no_ingest)
+        for cfg, want in (
+            (CrawlConfig(checkpoint_dir=full_dir,
+                         robots_from_corpus=True), full),
+            (CrawlConfig(checkpoint_dir=part_dir, max_waves=2,
+                         robots_from_corpus=True), interrupted),
+        ):
+            done = run_crawl(spark, seeds_df, pages_df, cfg, resume=True)
+            assert done.wave == want.wave
+            assert _key_outputs(done) == _key_outputs(want)
+
+    # the mid-crawl resume has waves left, so it ingests as before
     resumed = run_crawl(
         spark, seeds_df, pages_df,
         CrawlConfig(checkpoint_dir=part_dir),

@@ -29,7 +29,7 @@ def test_hand_built_grammar_shapes():
     doc = ("{\\rtf1\\ansi \\uc2 \\u5954 ABafter "
            "{\\*\\generator Fancy 1.0}x\\line y\\par "
            "{\\colortbl;\\red0;}tail\\par}").encode("ascii")
-    assert extract_rtf_text(doc) == (3, "ᝂafter x\ny\ntail")
+    assert extract_rtf_text(doc) == (2, "ᝂafter x\ny\ntail")
 
     neg = b"{\\rtf1 \\uc1 \\u-3999?X\\par}"
     n, t = extract_rtf_text(neg)
@@ -47,6 +47,17 @@ def test_hand_built_grammar_shapes():
     f = (b"{\\rtf1{\\fonttbl{\\f0 Arial;}}{\\info{\\author X}}"
          b"\\wobble42 body\\par}")
     assert extract_rtf_text(f) == (1, "body")
+
+
+def test_line_is_a_newline_inside_a_paragraph():
+    """\\line breaks a line but not a paragraph: n_paras counts \\par
+    (plus an unterminated last paragraph), the text keeps both
+    breaks as '\\n'."""
+    doc = b"{\\rtf1 one\\line two\\par three\\line\\line four\\par}"
+    assert extract_rtf_text(doc) == (2, "one\ntwo\nthree\n\nfour")
+    assert extract_rtf_text(b"{\\rtf1 a\\line b}") == (1, "a\nb")
+    assert extract_rtf_text(b"{\\rtf1 a\\par b}") == (2, "a\nb")
+    assert extract_rtf_text(b"{\\rtf1 {\\*\\x a\\par}}") == (0, "")
 
 
 def test_corrupt_rejection():
