@@ -44,3 +44,16 @@ def seeds_df(spark, fixture_data):
         for s in seeds
     ]
     return spark.createDataFrame(rows, SEED_SCHEMA)
+
+
+@pytest.fixture(scope="session")
+def fixture_crawl(spark, seeds_df, pages_df, tmp_path_factory):
+    """One default-config crawl of the fixture corpus, shared by every
+    test that needs its outputs or its finished checkpoint:
+    (state, checkpoint_dir). Read-only: a test that writes waves or
+    files must copy the checkpoint dir first."""
+    from barkingowl_spark.plans.crawl import CrawlConfig, run_crawl
+
+    ckpt = str(tmp_path_factory.mktemp("fixture_crawl"))
+    return run_crawl(spark, seeds_df, pages_df,
+                     CrawlConfig(checkpoint_dir=ckpt)), ckpt

@@ -6,7 +6,9 @@ resume byte-identical while bounding the dir count."""
 from __future__ import annotations
 
 import os
+import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from barkingowl_spark.plans.crawl import CrawlConfig, run_crawl
@@ -36,21 +38,34 @@ def _chain_corpus(spark):
     )
 
 
+@pytest.fixture(scope="module")
+def chain(spark):
+    return _chain_corpus(spark)
+
+
+@pytest.fixture(scope="module")
+def compacted(spark, chain, tmp_path_factory):
+    """(state, checkpoint_dir) of the full chain crawl with
+    archive_compact_every=3, shared read-only by this module's tests."""
+    pages_df, seeds_df = chain
+    d = str(tmp_path_factory.mktemp("comp"))
+    return run_crawl(
+        spark, seeds_df, pages_df,
+        CrawlConfig(checkpoint_dir=d, archive_compact_every=3),
+    ), d
+
+
 def test_compaction_identical_outputs_and_bounded_dirs(
-    spark, tmp_path_factory
+    spark, tmp_path_factory, chain, compacted
 ):
-    pages_df, seeds_df = _chain_corpus(spark)
+    pages_df, seeds_df = chain
 
     plain_dir = str(tmp_path_factory.mktemp("plain"))
     plain = run_crawl(
         spark, seeds_df, pages_df,
         CrawlConfig(checkpoint_dir=plain_dir, archive_compact_every=None),
     )
-    comp_dir = str(tmp_path_factory.mktemp("comp"))
-    comp = run_crawl(
-        spark, seeds_df, pages_df,
-        CrawlConfig(checkpoint_dir=comp_dir, archive_compact_every=3),
-    )
+    comp, comp_dir = compacted
     assert comp.wave == plain.wave >= CHAIN
     assert _key_outputs(comp) == _key_outputs(plain)
 
@@ -72,14 +87,10 @@ def test_compaction_identical_outputs_and_bounded_dirs(
     assert len(comps) == 1 and comps[0].startswith("upto=")
 
 
-def test_resume_exact_after_compaction(spark, tmp_path_factory):
-    pages_df, seeds_df = _chain_corpus(spark)
-
-    full = run_crawl(
-        spark, seeds_df, pages_df,
-        CrawlConfig(checkpoint_dir=str(tmp_path_factory.mktemp("full")),
-                    archive_compact_every=3),
-    )
+def test_resume_exact_after_compaction(spark, tmp_path_factory, chain,
+                                      compacted):
+    pages_df, seeds_df = chain
+    full = compacted[0]
     part_dir = str(tmp_path_factory.mktemp("part"))
     interrupted = run_crawl(
         spark, seeds_df, pages_df,
@@ -99,17 +110,14 @@ def test_resume_exact_after_compaction(spark, tmp_path_factory):
 
 
 def test_crash_between_commit_and_cleanup_is_invisible(
-    spark, tmp_path_factory
+    spark, tmp_path_factory, compacted
 ):
     """A committed compact dir with its stale inputs still present (the
     crash window) must read exactly once — read_archive takes the
     latest compact + only NEWER deltas."""
-    pages_df, seeds_df = _chain_corpus(spark)
-    d = str(tmp_path_factory.mktemp("crash"))
-    st = run_crawl(
-        spark, seeds_df, pages_df,
-        CrawlConfig(checkpoint_dir=d, archive_compact_every=3),
-    )
+    st, src_dir = compacted
+    d = str(tmp_path_factory.mktemp("crash") / "ckpt")
+    shutil.copytree(src_dir, d)  # the crash is simulated on a copy
     io = ParquetDirsIO(d, compact_every=3)
     upto = io._compact_uptos()[-1]
     before = io.read_archive(spark, st.wave).count()

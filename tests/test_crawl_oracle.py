@@ -48,12 +48,8 @@ def spark_outputs(state):
 
 
 @pytest.fixture(scope="module")
-def crawl_state(spark, seeds_df, pages_df, tmp_path_factory):
-    cfg = CrawlConfig(
-        checkpoint_dir=str(tmp_path_factory.mktemp("ckpt")),
-        host_budget=None,
-    )
-    return run_crawl(spark, seeds_df, pages_df, cfg)
+def crawl_state(fixture_crawl):
+    return fixture_crawl[0]  # default config: host_budget=None
 
 
 def test_trace_matches_oracle(crawl_state, fixture_data):

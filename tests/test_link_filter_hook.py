@@ -11,11 +11,8 @@ from barkingowl_spark.plans.crawl import CrawlConfig, run_crawl
 
 
 @pytest.fixture(scope="module")
-def base_state(spark, seeds_df, pages_df, tmp_path_factory):
-    return run_crawl(
-        spark, seeds_df, pages_df,
-        CrawlConfig(checkpoint_dir=str(tmp_path_factory.mktemp("lf0"))),
-    )
+def base_state(fixture_crawl):
+    return fixture_crawl[0]
 
 
 def test_url_filter_hook_prunes_subtree(

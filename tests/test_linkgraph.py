@@ -94,14 +94,10 @@ def test_host_graph_rollup(spark):
     }
 
 
-def test_pagerank_over_crawl_archive(spark, seeds_df, pages_df,
-                                     tmp_path_factory):
+def test_pagerank_over_crawl_archive(fixture_crawl):
     """The real pipeline: crawl -> archive edges -> degree + rank, ranks
     bit-exact vs the reference recurrence run on the same edge list."""
-    from barkingowl_spark.plans.crawl import CrawlConfig, run_crawl
-
-    st = run_crawl(spark, seeds_df, pages_df, CrawlConfig(
-        checkpoint_dir=str(tmp_path_factory.mktemp("ckpt_lg"))))
+    st = fixture_crawl[0]
     edges_df = edges_from_archive(st.frontier()).distinct()
     edges = [(r["src"], r["dst"]) for r in edges_df.collect()]
     assert len(edges) > 50

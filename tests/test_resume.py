@@ -5,6 +5,10 @@ in-memory state entirely (we only keep the checkpoint dir)."""
 
 from __future__ import annotations
 
+import shutil
+
+import pytest
+
 from barkingowl_spark.plans.crawl import CrawlConfig, run_crawl
 from barkingowl_spark.sources.tableio import ParquetDirsIO
 
@@ -22,16 +26,28 @@ def _key_outputs(state):
     return trace, docs
 
 
-def test_resume_reproduces_uninterrupted_run(spark, seeds_df, pages_df,
-                                             tmp_path_factory, monkeypatch):
-    full_dir = str(tmp_path_factory.mktemp("full"))
-    full = run_crawl(spark, seeds_df, pages_df,
-                     CrawlConfig(checkpoint_dir=full_dir))
+@pytest.fixture(scope="module")
+def two_wave_ckpt(spark, seeds_df, pages_df, tmp_path_factory):
+    """(state, checkpoint_dir) of the fixture crawl stopped at
+    max_waves=2. Tests that resume it work on a copy of the dir."""
+    d = str(tmp_path_factory.mktemp("part"))
+    return run_crawl(spark, seeds_df, pages_df,
+                     CrawlConfig(checkpoint_dir=d, max_waves=2)), d
 
-    part_dir = str(tmp_path_factory.mktemp("part"))
-    part_cfg = CrawlConfig(checkpoint_dir=part_dir, max_waves=2)
-    interrupted = run_crawl(spark, seeds_df, pages_df, part_cfg)
+
+def _copy_ckpt(src, tmp_path_factory, name):
+    dst = str(tmp_path_factory.mktemp(name) / "ckpt")
+    shutil.copytree(src, dst)
+    return dst
+
+
+def test_resume_reproduces_uninterrupted_run(spark, seeds_df, pages_df,
+                                             tmp_path_factory, monkeypatch,
+                                             fixture_crawl, two_wave_ckpt):
+    full, full_dir = fixture_crawl
+    interrupted, part_src = two_wave_ckpt
     assert interrupted.wave == 2  # stopped mid-crawl
+    part_dir = _copy_ckpt(part_src, tmp_path_factory, "part_resume")
 
     # A checkpoint with no wave left (the finished crawl; the interrupted
     # one at its own wave cap) is returned from the checkpoint alone: the
@@ -68,13 +84,11 @@ def test_resume_reproduces_uninterrupted_run(spark, seeds_df, pages_df,
 
 
 def test_partial_wave_dir_is_not_resumed(spark, seeds_df, pages_df,
-                                         tmp_path_factory):
+                                         tmp_path_factory, two_wave_ckpt):
     import json
     import os
 
-    d = str(tmp_path_factory.mktemp("atomic"))
-    cfg = CrawlConfig(checkpoint_dir=d, max_waves=2)
-    run_crawl(spark, seeds_df, pages_df, cfg)
+    d = _copy_ckpt(two_wave_ckpt[1], tmp_path_factory, "atomic")
     # simulate a crash mid-write: wave dir without manifest
     os.makedirs(os.path.join(d, "wave=99"))
     # ... and a crash between the manifest write and the commit rename:

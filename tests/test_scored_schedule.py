@@ -60,14 +60,10 @@ def test_cold_start_equals_plain_budget(spark):
         sorted(map(tuple, plain.collect()))
 
 
-def test_rank_driven_schedule_over_crawl_graph(spark, seeds_df, pages_df,
-                                               tmp_path_factory):
+def test_rank_driven_schedule_over_crawl_graph(spark, fixture_crawl):
     """The composition: crawl -> edge graph -> PageRank -> scores keyed
     by url_hash -> scored budget. High-rank URLs win their host's slots."""
-    from barkingowl_spark.plans.crawl import CrawlConfig, run_crawl
-
-    st = run_crawl(spark, seeds_df, pages_df, CrawlConfig(
-        checkpoint_dir=str(tmp_path_factory.mktemp("ckpt_ss"))))
+    st = fixture_crawl[0]
     ranks = pagerank_fixed(edges_from_archive(st.frontier()), 3)
     scores = ranks.select(
         F.xxhash64("node").alias("url_hash"),
