@@ -21,9 +21,9 @@ independent of partition boundaries, cluster size, or sampling inside
 the range partitioner — which is what lets DuckDB's plain
 dense_rank() OVER (ORDER BY key) serve as the value-hash oracle.
 
-The driver-side collect is one row per shuffle partition (the same
-bounded-ledger discipline as the crawl plan's adaptive salt, see
-plans/crawl.py) — never one row per key.
+The driver-side collect is one row per shuffle partition — never one
+row per key (the crawl plan's per-wave metrics keep the same rule: only
+two scalar totals reach the driver, see plans/crawl.py).
 
 Primary consumer: operators/suffixes.py prefix doubling, which needs a
 fresh global dense rank per round. No reference counterpart

@@ -33,7 +33,9 @@ inventory in DESIGN.md):
     anti-join and typecheck are always shuffle-hash (growing/corpus-sized
     build sides must never be driver-broadcast per iteration).
   * The queue write repartitions by (host, salt) — pmod(url_hash, S) — to
-    split hot hosts across executors (north_star skew rule).
+    split hot hosts across executors (north_star skew rule); S is sized
+    from the queue's row count, which the driver already holds as the
+    level-sync scheduler state (no per-host counts ship to the driver).
   * spark.sql.shuffle.partitions is re-sized per wave with the explicit
     ceil(queue_rows / 4M) rule (north_rule) using the previous wave's
     counts; AQE coalesces the sandbox's tiny waves back down.
@@ -45,7 +47,6 @@ from __future__ import annotations
 
 import os
 import time
-from collections import Counter
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -74,19 +75,18 @@ BROADCAST_WAVE_ROWS = 2_000_000
 # session-wide 10k-row default would mean ~0.5GB batches per worker.
 ARROW_BATCH_ROWS = 2048
 # Hot-host salt for the frontier-queue write (north_star skew rule): S
-# adapts per wave from the hottest host's queued-row count (SURVEY.md
-# section 4.2 — "S chosen from per-host counts of the previous wave"),
-# fed by the same per-(wave,host) metrics collect the scheduler already
-# does: S = ceil(hottest_host_rows / SALT_TARGET_ROWS), clamped to
-# [1, SALT_MAX].
+# adapts per wave from the queue's row count, an upper bound on the
+# hottest host's rows that the driver already holds exactly (the
+# level-sync state due + children): S = ceil(queue_rows /
+# SALT_TARGET_ROWS), clamped to [1, SALT_MAX].
 SALT_TARGET_ROWS = 1_000_000
 SALT_MAX = 256
 
 
-def salt_for(hot_rows: int, target_rows: int, cap: int) -> int:
+def salt_for(queue_rows: int, target_rows: int, cap: int) -> int:
     """Adaptive hot-host salt: one salt bucket per ~target_rows rows of
-    the hottest host's queue, clamped to [1, cap]."""
-    return max(1, min(cap, -(-hot_rows // target_rows)))
+    the queue, clamped to [1, cap]."""
+    return max(1, min(cap, -(-queue_rows // target_rows)))
 
 
 FRONTIER_COLS = [
@@ -165,15 +165,8 @@ class CrawlState:
         )
 
 
-SEEDS_CFG_SCHEMA = (
-    "seed_url string, seed_host string, max_link_level int, "
-    "doc_type string, seed_idx int"
-)
-
-
-def _seed_rows(seeds: DataFrame) -> list[tuple]:
-    """Canonicalized seed config rows (SEEDS_CFG_SCHEMA) for the
-    broadcast config join (O14).
+def _seeds_cfg(spark: SparkSession, seeds: DataFrame) -> DataFrame:
+    """Canonicalized seed config for the broadcast config join (O14).
 
     Seeds are tiny (driver-side canonicalization mirrors the oracle's)."""
     rows = seeds.collect()
@@ -192,7 +185,10 @@ def _seed_rows(seeds: DataFrame) -> list[tuple]:
             (canon, host_of(canon), int(r["max_link_level"]), r["doc_type"],
              int(r["seed_idx"]))
         )
-    return out
+    return spark.createDataFrame(
+        out, "seed_url string, seed_host string, max_link_level int, "
+             "doc_type string, seed_idx int",
+    )
 
 
 def _typecheck(candidates: DataFrame, pages_ct: DataFrame,
@@ -248,8 +244,6 @@ def _seed_frontier_rows(pages_ct: DataFrame, seeds_cfg: DataFrame) -> DataFrame:
     return _typecheck(seed_rows, seed_ct, seeds_cfg)
 
 
-
-
 def run_crawl(
     spark: SparkSession,
     seeds: DataFrame,
@@ -291,13 +285,12 @@ def run_crawl(
             )
         # the wave loop's own exit test, before any job: a checkpoint with
         # nothing due at d or d+1, or at the wave cap, is the final state —
-        # return it before the seeds collect, robots dim, corpus parse and
-        # ledger job, none of which it needs
+        # return it before the seeds collect, robots dim and corpus parse,
+        # none of which it needs
         if (state.wave >= config.max_waves
                 or (due_remaining <= 0 and children <= 0)):
             return state
-    seed_rows = _seed_rows(seeds)
-    seeds_cfg = spark.createDataFrame(seed_rows, SEEDS_CFG_SCHEMA)
+    seeds_cfg = _seeds_cfg(spark, seeds)
     from pyspark import StorageLevel
 
     spark.conf.set(
@@ -380,46 +373,11 @@ def run_crawl(
             .select(*FRONTIER_COLS).repartition(1),
             {"totals": {}, "sched": None},
         )
-        io.write_metrics_rows(0, [])
         state = _load(0)
         d, due_remaining, children = 0, state.queue.count(), 0
         if os.environ.get("BOW_TIMING") == "1":
             print(f"BOW_TIMING seed_wave={time.monotonic() - _t_seed:.2f}",
                   flush=True)
-
-    _t_pre = time.monotonic()
-
-    # Adaptive-salt ledger (SURVEY.md section 4.2): per-host queued-row
-    # counts maintained driver-side from the SAME per-(wave,host) metrics
-    # collect the scheduler already does — no extra jobs per wave. Entries
-    # below SALT_TARGET_ROWS/8 are pruned so the ledger stays O(hot hosts)
-    # at the 10^10 design point (at most frontier_rows/threshold entries
-    # can exceed the threshold); a pruned host re-earns its entry with its
-    # next big wave — the write-layout heuristic needs the hot tail, not
-    # exactness.
-    salt_prune = max(1, SALT_TARGET_ROWS // 8)
-    host_led: dict[str, int] = {}
-    # a fresh crawl's queue is a subset of the canonical seed rows already
-    # collected in seed_rows: if no seed host reaches salt_prune, the ledger
-    # is empty and the job below would return nothing
-    if start_wave is not None or max(
-        Counter(r[1] for r in seed_rows).values(), default=0,
-    ) >= salt_prune:
-        # threshold applied IN the plan: only the hot tail (at most
-        # queue_rows/salt_prune hosts) ever reaches the driver
-        host_led = {
-            r["host"]: r["n"]
-            for r in state.queue.groupBy("host")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") >= F.lit(salt_prune))
-            .collect()
-        }
-    cur_salt = salt_for(
-        max(host_led.values(), default=0), SALT_TARGET_ROWS, SALT_MAX,
-    )
-    if os.environ.get("BOW_TIMING") == "1":
-        print(f"BOW_TIMING preloop_total={time.monotonic() - _t_pre:.2f}",
-              flush=True)
 
     default_par = spark.sparkContext.defaultParallelism
     while state.wave < config.max_waves:
@@ -541,9 +499,7 @@ def run_crawl(
         queue2 = queue_rest.unionByName(new_queue_rows)
         archive_delta = fetched_rows.unionByName(new_terminal)
 
-        # D7 metrics: parent-host + child-host counters, merged; collected
-        # to the driver (they double as the scheduler's bookkeeping) and
-        # persisted driver-side — no distributed metrics write
+        # D7 metrics: parent-host + child-host counters, merged in
         # one shuffle, not three: parent- and child-side counters union
         # into a single groupBy(host) (each side zero-fills the other's
         # counters) instead of two groupBys + a full_outer join
@@ -574,26 +530,13 @@ def run_crawl(
         )
         # Full metrics rows are written DISTRIBUTED (never collected — at
         # 10^10 hosts the per-wave host list must not ship to the driver).
-        # Everything the driver needs from this wave rides the SAME write
-        # job via Observation: the scheduler's two scalar totals, plus the
-        # adaptive-salt hot tail as a collect_list over only the rows that
-        # can touch the ledger (wave delta >= salt_prune, or host already
-        # ledgered) — O(hot hosts), bounded by frontier/salt_prune. One
-        # job per wave for all metrics work, zero persists.
+        # The scheduler's two scalar totals ride the SAME write job via
+        # Observation: one job per wave for all metrics work, zero persists.
         from pyspark.sql import Observation
 
-        is_tail = (
-            F.col("new_queued") - F.col("pages_fetched") >= F.lit(salt_prune)
-        )
-        if host_led:
-            is_tail = is_tail | F.col("host").isin(list(host_led))
         obs_aggs = [
             F.sum("pages_fetched").alias("fetched"),
             F.sum("new_queued").alias("queued"),
-            F.collect_list(  # nulls (non-tail rows) are skipped
-                F.when(is_tail, F.struct(
-                    "host", "new_queued", "pages_fetched"))
-            ).alias("hot_tail"),
         ]
         obs = Observation()
         # metrics rows are ~bytes/host: coalesce the write to the same
@@ -609,22 +552,15 @@ def run_crawl(
         new_queued_total = int(totals["queued"] or 0)
         due_remaining -= sched_total
         children += new_queued_total
-        for r in totals.get("hot_tail") or []:
-            c = (host_led.get(r["host"], 0)
-                 + r["new_queued"] - r["pages_fetched"])
-            if c >= salt_prune:
-                host_led[r["host"]] = c
-            else:
-                host_led.pop(r["host"], None)
-        cur_salt = salt_for(
-            max(host_led.values(), default=0), SALT_TARGET_ROWS, SALT_MAX,
-        )
+        # due + children is exactly queue2's row count
+        cur_salt = salt_for(due_remaining + children, SALT_TARGET_ROWS,
+                            SALT_MAX)
 
         n_out = max(1, min(default_par, queue_rows // 250_000 + 1))
         # frontier rows repartition by (host, salted hash) — north_star's
         # skew rule, applied to the narrow queue (hot hosts split over
-        # cur_salt buckets; the politeness window reads this back
-        # host-clustered next wave)
+        # cur_salt buckets; nothing reads the layout back — a budgeted
+        # politeness window re-shuffles by host next wave)
         io.write_wave(
             wave,
             queue2.repartition(

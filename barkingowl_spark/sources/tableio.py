@@ -12,7 +12,8 @@ Here every wave ends with an atomic snapshot so runs resume exactly
                                   complete; also carries the driver-side
                                   scheduler state for exact resume
   <root>/delta/metrics/wave=K/    per-(wave,host) lineage rows, written
-                                  driver-side (they were collected anyway)
+                                  distributed (write_metrics_df); the seed
+                                  wave writes none
 
 Queue and archive share FRONTIER_SCHEMA, so both land in a single
 partitionBy('_t') write. Old waves keep their archive delta + manifest
@@ -162,23 +163,6 @@ class ParquetDirsIO:
             shutil.rmtree(path)
         os.rename(tmp, path)
 
-    def write_metrics_rows(self, wave: int, rows: list[dict]) -> None:
-        """Driver-side lineage write (rows already collected — no job)."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        path = self._metrics_dir(wave)
-        os.makedirs(path, exist_ok=True)
-        cols = {}
-        for field in METRICS_SCHEMA.fields:
-            typ = (pa.int32() if field.dataType.simpleString() == "int"
-                   else pa.string() if field.dataType.simpleString() == "string"
-                   else pa.int64())
-            cols[field.name] = pa.array(
-                [r[field.name] for r in rows], typ
-            )
-        pq.write_table(pa.table(cols), os.path.join(path, "part-0.parquet"))
-
     # -- read -------------------------------------------------------------
 
     def list_waves(self) -> list[int]:
@@ -295,17 +279,6 @@ class IcebergIO:
 
     def write_metrics_df(self, wave, metrics) -> None:
         metrics.writeTo(self._tbl("metrics")).append()
-
-    def write_metrics_rows(self, wave, rows) -> None:
-        if not rows:
-            return
-        import pandas as pd
-
-        first = rows[0]
-        spark = SparkSession.getActiveSession()
-        spark.createDataFrame(
-            pd.DataFrame(rows, columns=list(first))
-        ).writeTo(self._tbl("metrics")).append()
 
     def list_waves(self) -> list[int]:
         spark = SparkSession.getActiveSession()

@@ -53,6 +53,10 @@ def main(argv: list[str] | None = None) -> None:
                    help="also apply the default keyword score gate "
                         "(threshold -250 milli) to candidate links")
     args = p.parse_args(argv)
+    if args.politeness_seconds is not None and not args.robots:
+        # Crawl-delay comes only from the robots dim: without --robots
+        # the flag would be dropped silently
+        p.error("--politeness-seconds needs --robots")
 
     from barkingowl_spark.plans.crawl import CrawlConfig, run_crawl
     from barkingowl_spark.schemas import SEED_SCHEMA

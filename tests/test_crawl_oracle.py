@@ -154,8 +154,9 @@ def test_adaptive_salt_identical_outputs(spark, seeds_df, pages_df,
                                          fixture_data, tmp_path_factory,
                                          monkeypatch):
     """Two layout-only plan paths in one crawl, both checked against the
-    oracle: the adaptive per-wave salt (a tiny SALT_TARGET_ROWS, so S
-    actually varies wave to wave) only changes the queue write LAYOUT,
+    oracle: the adaptive per-wave salt (S from the queue's row count; a
+    tiny SALT_TARGET_ROWS, so S actually varies wave to wave, 4 -> 1 as
+    the queue drains) only changes the queue write LAYOUT,
     and BROADCAST_WAVE_ROWS=0 sends every wave down the big-wave path
     (shuffle-hash joins of the wave against ingest_pages and edges, the
     10^10 shape) instead of broadcasting it. Trace/documents/texts must

@@ -41,3 +41,17 @@ def test_cli_block_domains(spark, pages_df, fixture_data, tmp_path,
     # the frontier, and its 27 documents are gone
     assert gated["documents"] == base["documents"] - 27
     assert gated["frontier_urls"] < base["frontier_urls"]
+
+
+def test_cli_politeness_seconds_needs_robots(tmp_path, capsys):
+    """Crawl-delay budgets come from the robots dim, so the flag alone
+    is rejected before any Spark work (no corpus read)."""
+    from jobs.crawl_wave import main
+
+    with pytest.raises(SystemExit) as exc:
+        main(["--pages", str(tmp_path / "no-such-corpus"),
+              "--seeds", "[]",
+              "--checkpoint", str(tmp_path / "ck"),
+              "--politeness-seconds", "10"])
+    assert exc.value.code == 2
+    assert "--politeness-seconds needs --robots" in capsys.readouterr().err

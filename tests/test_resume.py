@@ -83,6 +83,23 @@ def test_resume_reproduces_uninterrupted_run(spark, seeds_df, pages_df,
     assert _key_outputs(resumed) == _key_outputs(full)
 
 
+def test_sched_state_is_the_queue_row_count(spark, fixture_crawl,
+                                            two_wave_ckpt):
+    """The manifest's level-sync state (due at depth d + children at
+    d+1) is exactly the committed queue's row count. The resume exit
+    test and the queue-write salt both read it in place of a count."""
+    checked = 0
+    for _, d in (two_wave_ckpt, fixture_crawl):
+        io = ParquetDirsIO(d)
+        for w in io.list_waves()[-2:]:  # older queue snapshots are pruned
+            sched = io.read_meta(w)["sched"]
+            assert sched is not None, w
+            assert (sched["due"] + sched["children"]
+                    == io.read_queue(spark, w).count()), (d, w, sched)
+            checked += 1
+    assert checked == 4
+
+
 def test_partial_wave_dir_is_not_resumed(spark, seeds_df, pages_df,
                                          tmp_path_factory, two_wave_ckpt):
     import json
